@@ -89,7 +89,9 @@ def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def bench_cdc_replay(spark, trials: int = 3) -> tuple[float, float]:
+def bench_cdc_replay(
+    spark, trials: int = 3
+) -> tuple[float, float, list[float]]:
     """Generate a deterministic feed once, replay it through the engine
     ``trials`` times (fresh table each); return the MEDIAN (replay
     seconds, events/sec) plus the raw trial times (their spread is the

@@ -31,13 +31,16 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from postgres_to_snowflake_data_pipeline_spark.cdc.dedup import lww_dedup, lww_patch_dedup
 from postgres_to_snowflake_data_pipeline_spark.cdc.normalize import (
     evolve_schema,
     normalize_to_schema,
 )
 from postgres_to_snowflake_data_pipeline_spark.cdc.schemas import KEY_COLS, ORDER_COL
-from postgres_to_snowflake_data_pipeline_spark.lake.table import LakeTable, bucket_expr
+from postgres_to_snowflake_data_pipeline_spark.lake.table import (
+    LakeTable,
+    bucket_expr,
+    resolve_lww,
+)
 
 #: per-epoch lineage (one row per merge commit)
 LINEAGE_SCHEMA = T.StructType(
@@ -240,70 +243,55 @@ def _normalize_batch(table: LakeTable, events: DataFrame, obs_name: str):
     return table_schema, events, _obs_metrics
 
 
-def _dedup_storage(
+def lww_dedup(
     events: DataFrame,
     table_schema: T.StructType,
-    snap0,
-    salt_buckets: int,
+    snap,
+    salt_buckets: int | None,
 ) -> DataFrame:
-    """The single-shuffle half shared by every batch path: LWW dedup
-    fused with the bucket clustering (see apply_batch's step-3 comment
-    for why grouping by (_bucket, key...) after repartition(_bucket)
-    needs no second exchange), or the two-stage salted reduction when
-    ``salt_buckets`` > 1. Returns the storage-shaped winners
-    (payload + _lsn/_deleted/_bucket, bucket-clustered)."""
-    key_cols = tuple(snap0.key_cols)  # the table's, not the schema default:
-    kcol0 = key_cols[0]               # key columns can be RENAMED mid-stream
-    patch = LakeTable._patch_spec(snap0)
+    """Within-batch LWW dedup, shared by every batch path: the events are
+    projected to storage shape (``_lsn`` = lsn, ``_deleted`` = op is
+    delete; on partial-update tables ``_plsn_{c}`` = lsn when an upsert
+    sets ``c`` — non-NULL, not the sentinel — and ``_dlsn`` = lsn on a
+    delete) and reduced by the table's own LWW rule,
+    lake/table.py::resolve_lww. This replaces the reference loader's
+    clear-and-reload plus ``INSERT ... ON CONFLICT DO NOTHING``
+    (scripts/load_data.py): the survivor per key is its highest-LSN
+    event, deletes leaving a tombstone.
+
+    Fused (default): grouping by (_bucket, key...) after
+    repartition(_bucket) needs no second exchange (see apply_batch's
+    step 3). Salted (``salt_buckets`` > 1): the two-stage reduction, then
+    a re-cluster on _bucket. Returns the storage-shaped winners (payload +
+    _lsn/_deleted/_bucket [+ patch internals]), bucket-clustered."""
+    # the table's key columns, not the schema default: they can be
+    # RENAMED mid-stream
+    key_cols, n = list(snap.key_cols), snap.n_buckets
+    lsn, deleted = F.col(ORDER_COL), F.col("op") == "delete"
+    cols = [f.name for f in table_schema.fields]
+    cols += [lsn.alias("_lsn"), deleted.alias("_deleted")]
+    patch = LakeTable._patch_spec(snap)
     if patch is not None:
-        # partial-update table: same fused single-shuffle shape, with the
-        # patch-aware reduction (cdc/dedup.py::lww_patch_dedup) and the
-        # per-column LSN + delete-LSN internals appended to storage
         pcols, sentinel = patch
-        pcols = tuple(c for c in pcols if c in events.columns)
-        if salt_buckets and salt_buckets > 1:
-            winners = lww_patch_dedup(
-                events, key_cols, pcols, sentinel, salt_buckets=salt_buckets
-            )
-            winners = winners.withColumn(
-                "_bucket", bucket_expr(kcol0, snap0.n_buckets)
-            )
-            winners = winners.repartition(snap0.n_buckets, F.col("_bucket"))
-        else:
-            bucketed = events.withColumn(
-                "_bucket", bucket_expr(kcol0, snap0.n_buckets)
-            )
-            bucketed = bucketed.repartition(snap0.n_buckets, F.col("_bucket"))
-            winners = lww_patch_dedup(
-                bucketed, ("_bucket",) + key_cols, pcols, sentinel
-            )
-        return winners.select(
-            *[f.name for f in table_schema.fields],
-            F.col(ORDER_COL).alias("_lsn"),
-            (F.col("op") == "delete").alias("_deleted"),
-            F.col("_bucket"),
-            *[F.col(f"_plsn_{c}") for c in pcols],
-            F.col("_dlsn"),
-        )
+        for c in pcols:
+            if c in events.columns:
+                sets = ~deleted & F.col(c).isNotNull() & (F.col(c) != sentinel)
+                cols.append(F.when(sets, lsn).alias(f"_plsn_{c}"))
+        cols.append(F.when(deleted, lsn).alias("_dlsn"))
+    rows = events.select(*cols)
+    bucket = bucket_expr(key_cols[0], n)
     if salt_buckets and salt_buckets > 1:
-        winners = lww_dedup(events, key_cols, salt_buckets=salt_buckets)
-        winners = winners.withColumn("_bucket", bucket_expr(kcol0, snap0.n_buckets))
+        winners = resolve_lww(rows, key_cols, salt_buckets)
         # re-cluster on _bucket before the write: the salted reduction left
         # the winners partitioned by key-hash, so without this exchange the
         # partitionBy write would scatter every bucket across all shuffle
         # partitions — up to shuffle_partitions x n_buckets delta files per
         # epoch instead of the one-file-per-bucket invariant.
-        winners = winners.repartition(snap0.n_buckets, F.col("_bucket"))
-    else:
-        bucketed = events.withColumn("_bucket", bucket_expr(kcol0, snap0.n_buckets))
-        bucketed = bucketed.repartition(snap0.n_buckets, F.col("_bucket"))
-        winners = lww_dedup(bucketed, ("_bucket",) + key_cols)
-    return winners.select(
-        *[f.name for f in table_schema.fields],
-        F.col(ORDER_COL).alias("_lsn"),
-        (F.col("op") == "delete").alias("_deleted"),
-        F.col("_bucket"),
-    )
+        return winners.withColumn("_bucket", bucket).repartition(
+            n, F.col("_bucket")
+        )
+    rows = rows.withColumn("_bucket", bucket).repartition(n, F.col("_bucket"))
+    return resolve_lww(rows, ["_bucket", *key_cols])
 
 
 def apply_batch(
@@ -398,7 +386,7 @@ def apply_batch(
                 events, snap0.key_cols[0], snap0.n_buckets
             )
             salt_buckets = resolve_salt(hot_share, snap0.n_buckets)
-    storage = _dedup_storage(events, table_schema, snap0, salt_buckets)
+    storage = lww_dedup(events, table_schema, snap0, salt_buckets)
 
     # ---- 4. merge (delta append + atomic snapshot commit). The lineage
     # metrics ride INSIDE the snapshot summary so they commit atomically
@@ -720,7 +708,7 @@ def reprocess_quarantined(
         table_schema, events, _obs_metrics = _normalize_batch(
             table, events, f"reprocess-{name}"
         )
-        storage = _dedup_storage(events, table_schema, table.current(), salt_buckets)
+        storage = lww_dedup(events, table_schema, table.current(), salt_buckets)
         summary = {
             "operation_detail": "reprocess-quarantined",
             "origin_staged_name": name,
@@ -1014,7 +1002,7 @@ def rebase_branch(spark: SparkSession, branch: "LakeTable") -> Any:
     table_schema, events, obs_fn = _normalize_batch(
         branch, feed, f"rebase-{head}"
     )
-    storage = _dedup_storage(events, table_schema, branch.current(), 0)
+    storage = lww_dedup(events, table_schema, branch.current(), 0)
     # data FIRST, frontier keys AFTER (ADVICE r4): folding the keys
     # before the merge meant a crash in between left the branch CLAIMING
     # epochs it did not contain — a direct replay of those epochs would

@@ -72,8 +72,8 @@ from typing import Any
 from pyspark.sql import SparkSession, functions as F, types as T
 
 from postgres_to_snowflake_data_pipeline_spark.cdc.apply import (
-    _dedup_storage,
     _normalize_batch,
+    lww_dedup,
 )
 from postgres_to_snowflake_data_pipeline_spark.lake.metadata import Snapshot
 from postgres_to_snowflake_data_pipeline_spark.lake.table import LakeTable
@@ -565,7 +565,7 @@ class TableMirror:
                 table_schema, events, obs_fn = _normalize_batch(
                     self._follower, feed, f"mirror-{upto}"
                 )
-                storage = _dedup_storage(
+                storage = lww_dedup(
                     events, table_schema, self._follower.current(), 0
                 )
                 s = self._follower.merge(

@@ -36,7 +36,8 @@ def schema_diff(incoming: T.StructType, target: T.StructType) -> dict[str, list[
 
 def _orderable(dt: T.DataType) -> bool:
     """Whether Spark can use the type in an ordering (struct-max LWW dedup
-    folds every payload column into its comparator — see cdc/dedup.py)."""
+    folds every payload column into its comparator — see
+    lake/table.py::resolve_lww)."""
     if isinstance(dt, T.MapType):
         return False
     if isinstance(dt, T.ArrayType):

@@ -864,8 +864,8 @@ class LakeAnnIndex:
         OLD quantizer's cells — correct but unreflected in the new
         centroids; the next drift cycle picks it up."""
         from postgres_to_snowflake_data_pipeline_spark.cdc.apply import (
-            _dedup_storage,
             _normalize_batch,
+            lww_dedup,
         )
 
         from postgres_to_snowflake_data_pipeline_spark.lake.metadata import epoch_of
@@ -958,7 +958,7 @@ class LakeAnnIndex:
         # pin dedup/bucketing to the snapshot the reassignments were
         # derived from — a fresh current() here could see a racing append
         # and bucket against a state this retrain never read
-        storage = _dedup_storage(events, table_schema, snap, 0)
+        storage = lww_dedup(events, table_schema, snap, 0)
         new_meta = dict(
             meta,
             base_rows=base_rows,

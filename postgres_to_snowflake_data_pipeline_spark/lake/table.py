@@ -144,70 +144,6 @@ def _plsn(col: str) -> str:
     return f"_plsn_{col}"
 
 
-def _resolve_patch(
-    df: DataFrame, key_cols: list[str], patch_cols: list[str]
-) -> DataFrame:
-    """Per-COLUMN last-writer-wins for partial-update tables (the
-    merge-on-read analog of Apache Paimon's *partial-update* merge engine,
-    public docs — not a code port). Storage rows carry, besides
-    ``_lsn``/``_deleted``, a per-patch-column set-LSN (``_plsn_{c}``) and
-    the max folded-in delete LSN (``_dlsn``); that makes the resolution
-    ASSOCIATIVE, so the same aggregate serves batch dedup output, read-time
-    merge over any number of deltas, and compaction:
-
-    - row existence + non-patch columns: the whole-row winner, exactly as
-      ``resolve_lww`` (max over the (_lsn, _dr, payload...) struct);
-    - each patch column: the value with the greatest ``_plsn_{c}`` —
-      KILLED to NULL when that LSN does not exceed ``max(_dlsn)`` (a later
-      delete destroyed it; a patch that re-creates the key must not
-      resurrect pre-delete column values).
-
-    One Tungsten hash aggregate: every per-column winner is a declarative
-    ``max`` over a (plsn, value) struct, NULL-skipping, so the whole
-    resolution is a single groupBy with map-side partials — same shuffle
-    shape and skew behavior as the plain LWW path."""
-    special = (
-        set(patch_cols) | {_plsn(c) for c in patch_cols} | {"_dlsn", "_lsn"}
-    )
-    other = [c for c in df.columns if c not in key_cols and c not in special]
-    prefixed = F.struct(
-        F.col("_lsn"),
-        F.col("_deleted").cast("int").alias("_dr"),
-        *[F.col(c) for c in other],
-    )
-    aggs = [F.max(prefixed).alias("_w"), F.max("_dlsn").alias("_D")]
-    for c in patch_cols:
-        aggs.append(
-            F.max(
-                F.when(
-                    F.col(_plsn(c)).isNotNull(),
-                    F.struct(F.col(_plsn(c)).alias("p"), F.col(c).alias("v")),
-                )
-            ).alias(f"_s_{c}")
-        )
-    g = df.groupBy(*key_cols).agg(*aggs)
-    out: list[F.Column] = []
-    for name in df.columns:  # preserve the input column order exactly
-        if name in key_cols:
-            out.append(F.col(name))
-        elif name in patch_cols:
-            live = F.col(f"_s_{name}").isNotNull() & (
-                F.col("_D").isNull() | (F.col(f"_s_{name}.p") > F.col("_D"))
-            )
-            out.append(F.when(live, F.col(f"_s_{name}.v")).alias(name))
-        elif name.startswith("_plsn_") and name[6:] in patch_cols:
-            c = name[6:]
-            live = F.col(f"_s_{c}").isNotNull() & (
-                F.col("_D").isNull() | (F.col(f"_s_{c}.p") > F.col("_D"))
-            )
-            out.append(F.when(live, F.col(f"_s_{c}.p")).alias(name))
-        elif name == "_dlsn":
-            out.append(F.col("_D").alias("_dlsn"))
-        else:
-            out.append(F.col(f"_w.{name}").alias(name))
-    return g.select(*out)
-
-
 def bucket_expr(col: str | F.Column, n_buckets: int) -> F.Column:
     """Deterministic bucket assignment — pure function of the key value, so
     the same key always lands in the same bucket at any cluster size."""
@@ -215,34 +151,97 @@ def bucket_expr(col: str | F.Column, n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(c), F.lit(n_buckets)).cast("int")
 
 
-def resolve_lww(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Last-writer-wins per key over rows carrying ``_lsn``/``_deleted``:
-    declarative max over an ordering-prefixed struct — stays in a Tungsten
-    aggregate (max_by would plan as ObjectHashAggregate and hit its 128-key
-    sort-based fallback on these near-unique keys; see cdc/dedup.py). The
-    (_lsn, _dr) prefix decides; trailing fields only tie-break identical
-    duplicate rows.
+def resolve_lww(
+    df: DataFrame, key_cols: list[str], salt_buckets: int = 0
+) -> DataFrame:
+    """Last-writer-wins per key over storage-shaped rows (``_lsn``,
+    ``_deleted``, payload; on partial-update tables also ``_plsn_{c}`` and
+    ``_dlsn``) — the ONE LWW reduction of the engine: batch dedup (events
+    projected to storage shape, cdc/apply.py::lww_dedup), read-time merge
+    over any number of deltas, compaction and view pre/post images all run
+    it, which is sound because the resolution is ASSOCIATIVE.
 
-    Self-detecting patch mode: a frame carrying ``_dlsn`` (partial-update
-    tables — see ``_resolve_patch``) routes to per-column LWW, so EVERY
-    resolution site (read, read_staged, compaction, view pre/post images)
-    honors patch semantics without per-caller plumbing."""
+    - row existence + non-patch columns: the whole-row winner, a
+      declarative ``max`` over the (_lsn, _dr, payload...) struct, planned
+      with partial aggregation (``max_by`` would plan as
+      ObjectHashAggregate and hit its 128-key sort-based fallback on these
+      near-unique keys, 2-3x slower). The (_lsn, _dr) prefix decides,
+      deletes winning LSN ties; trailing fields only tie-break identical
+      duplicate rows.
+    - ``_dlsn`` present: ``_D`` = the max folded-in delete LSN, carried to
+      the output even when no patch column is (a projected read).
+    - each patch column (partial-update tables — the merge-on-read analog
+      of Apache Paimon's *partial-update* merge engine, public docs, not a
+      code port): the value with the greatest ``_plsn_{c}``, KILLED to
+      NULL when that LSN does not exceed ``_D`` (a later delete destroyed
+      it; a patch that re-creates the key must not resurrect pre-delete
+      values). Every per-column winner is another NULL-skipping ``max``
+      over a (plsn, value) struct in the SAME aggregate.
+
+    A struct aggregation buffer is not hash-mutable, so on Spark 4.1 the
+    aggregate plans as SortAggregate (never ObjectHashAggregate).
+
+    ``salt_buckets > 1``: two-stage reduction for a hot key whose
+    per-partition partials are still too many — stage 1 groups by
+    (key..., pmod(xxhash64(_lsn), salt)), stage 2 maxes the same partial
+    columns per key. Salting lives inside this one function on purpose:
+    unpacking and re-packing the winner struct between two resolves
+    measured ~14% slower (400k events, local[4])."""
+    patch_cols = (
+        [c[6:] for c in df.columns if c.startswith("_plsn_")]
+        if "_dlsn" in df.columns
+        else []
+    )
+    special = (
+        set(patch_cols) | {_plsn(c) for c in patch_cols} | {"_dlsn", "_lsn"}
+    )
+    other = [c for c in df.columns if c not in key_cols and c not in special]
+    parts = {
+        "_w": F.struct(
+            F.col("_lsn"),
+            F.col("_deleted").cast("int").alias("_dr"),
+            *[F.col(c) for c in other],
+        )
+    }
     if "_dlsn" in df.columns:
-        patch_cols = [c[6:] for c in df.columns if c.startswith("_plsn_")]
-        return _resolve_patch(df, key_cols, patch_cols)
-    other = [c for c in df.columns if c not in key_cols and c != "_lsn"]
-    prefixed = F.struct(
-        F.col("_lsn"),
-        F.col("_deleted").cast("int").alias("_dr"),
-        *[F.col(c) for c in other],
-    )
-    return (
-        df.groupBy(*key_cols)
-        .agg(F.max(prefixed).alias("_w"))
-        .select(*key_cols, "_w.*")
-        .drop("_dr")
-        .select(*df.columns)
-    )
+        parts["_D"] = F.col("_dlsn")
+    for c in patch_cols:
+        parts[f"_s_{c}"] = F.when(
+            F.col(_plsn(c)).isNotNull(),
+            F.struct(F.col(_plsn(c)).alias("p"), F.col(c).alias("v")),
+        )
+    if salt_buckets > 1:
+        salt = F.pmod(F.xxhash64(F.col("_lsn")), F.lit(salt_buckets))
+        g = (
+            df.groupBy(*key_cols, salt.alias("_salt"))
+            .agg(*[F.max(e).alias(n) for n, e in parts.items()])
+            .groupBy(*key_cols)
+            .agg(*[F.max(n).alias(n) for n in parts])
+        )
+    else:
+        g = df.groupBy(*key_cols).agg(
+            *[F.max(e).alias(n) for n, e in parts.items()]
+        )
+
+    def live(c: str) -> F.Column:
+        return F.col(f"_s_{c}").isNotNull() & (
+            F.col("_D").isNull() | (F.col(f"_s_{c}.p") > F.col("_D"))
+        )
+
+    out: list[F.Column] = []
+    for name in df.columns:  # preserve the input column order exactly
+        if name in key_cols:
+            out.append(F.col(name))
+        elif name in patch_cols:
+            out.append(F.when(live(name), F.col(f"_s_{name}.v")).alias(name))
+        elif name.startswith("_plsn_") and name[6:] in patch_cols:
+            c = name[6:]
+            out.append(F.when(live(c), F.col(f"_s_{c}.p")).alias(name))
+        elif name == "_dlsn":
+            out.append(F.col("_D").alias("_dlsn"))
+        else:
+            out.append(F.col(f"_w.{name}").alias(name))
+    return g.select(*out)
 
 
 class LakeTable:
@@ -405,9 +404,6 @@ class LakeTable:
             else:
                 cols.append(F.col(fld.name))
         return df.select(*cols)
-
-    def _resolve_lww(self, df: DataFrame, key_cols: list[str]) -> DataFrame:
-        return resolve_lww(df, key_cols)
 
     def read(
         self,
@@ -643,7 +639,7 @@ class LakeTable:
             if df_d is not None:
                 df_d = df_d.join(semi_keys, on=on, how="left_semi")
         if df_d is not None:
-            df_d = self._resolve_lww(df_d, snap.key_cols)
+            df_d = resolve_lww(df_d, snap.key_cols)
         df = (
             df_f
             if df_d is None
@@ -3417,7 +3413,7 @@ class LakeTable:
             )
             return self.spark.createDataFrame([], T.StructType(fields))
         if with_base:
-            df = self._resolve_lww(df, snap.key_cols)
+            df = resolve_lww(df, snap.key_cols)
         # batch-only view: a staged commit holds per-key WINNERS by
         # stage_merge's contract (the same one merge() states — the
         # writer deduped before staging), so re-resolving LWW here would

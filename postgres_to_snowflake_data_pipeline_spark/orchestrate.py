@@ -1324,7 +1324,12 @@ class Pipeline:
         the files under ``skipped`` and keeps going WITHOUT consuming
         the epoch number (a permanently-missing ``epoch:{n}`` would
         wedge the watermark fold and every later epoch would live in the
-        residual key list forever — the O(n²) metadata trap).
+        residual key list forever — the O(n²) metadata trap). Unless the
+        failure was PARTIAL: when some table already committed
+        ``epoch:{n}``, reusing ``n`` would make that table silently skip
+        the next batch, so ``n`` is consumed instead — an empty
+        ``epoch:{n}`` key is folded on the tables that lack it and the
+        skipped record names the ``partial_tables``.
 
         ``max_ticks`` bounds the loop (None = run until
         ``stop_when_idle`` or forever); ``sleep`` is injectable for
@@ -1417,15 +1422,24 @@ class Pipeline:
                         f"({len(files)} files; intent persisted — re-run "
                         "to resume)"
                     ) from err
-                state["skipped"].append(
-                    {"epoch_intent": epoch, "files": files,
-                     "error": repr(err)}
+                key = f"epoch:{epoch}"
+                partial = sorted(
+                    n for n, t in self.tables.items() if t.has_commit_key(key)
                 )
+                record = {"epoch_intent": epoch, "files": files,
+                          "error": repr(err)}
+                if partial:
+                    for t in self.tables.values():  # no-op where present
+                        t.update_props({}, commit_key=key)
+                    state["next_epoch"] = epoch + 1
+                    record["partial_tables"] = partial
+                state["skipped"].append(record)
                 state["pending"] = None
                 _save()
                 ticks.append(
                     {"tick": len(ticks), "epoch": epoch, "files": files,
-                     "attempts": attempts, "skipped": True}
+                     "attempts": attempts, "skipped": True,
+                     "partial_tables": partial}
                 )
                 continue
             state["processed"].extend(files)

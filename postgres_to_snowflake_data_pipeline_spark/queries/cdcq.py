@@ -853,7 +853,8 @@ WHERE op <> 'delete' AND tool = 't3' AND role = 'purchase'
 # images (the transcripts table's big `text` column is exactly the column
 # that would be TOASTed); the feed marks them with the table's in-band
 # sentinel, and the engine's patch merge engine (props `patch.columns`,
-# lake/table.py::_resolve_patch + cdc/dedup.py::lww_patch_dedup) must carry
+# lake/table.py::resolve_lww over cdc/apply.py::lww_dedup's storage-shaped
+# events) must carry
 # the stored value forward — per COLUMN, across epochs, through deletes and
 # compaction. The oracle restates the rule declaratively: each patch
 # column's value is its latest SET (non-sentinel, non-delete) value, killed

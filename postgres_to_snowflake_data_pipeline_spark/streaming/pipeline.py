@@ -48,7 +48,6 @@ def run_stream(
     max_files_per_trigger: int = 1,
     compact_every: int = 16,
     compact_max_files: int | None = None,
-    compact_ts_slices: int | None = None,
     compact_layout: dict | None = None,
     salt_buckets: int | None = None,
     available_now: bool = True,
@@ -76,15 +75,13 @@ def run_stream(
     compacts just the buckets whose file count exceeded the bound — the
     read-amplification guard when batch sizes vary wildly (a cadence-only
     trigger lets per-bucket file counts grow unbounded between firings when
-    many small batches arrive). ``compact_ts_slices > 1`` time-clusters
-    the compacted bases (lake/table.py::compact) so manifest zone maps
-    keep skipping files for ``read(ts_prune=...)`` on the long-running
-    table; ``compact_layout`` is the general form — one of
-    ``{"ts_slices": k}`` / ``{"key_slices": k}`` / ``{"grid_slices":
-    (kk, tk)}`` — covering the other clustering axes (mutually exclusive
-    with ``compact_ts_slices``). The default (neither) PRESERVES whatever
-    clustering the table already has (a restarted stream that omits the
-    flag must not un-slice the layout its previous run built).
+    many small batches arrive). ``compact_layout`` clusters the compacted
+    bases (lake/table.py::compact) — one of ``{"ts_slices": k}`` (manifest
+    zone maps keep skipping files for ``read(ts_prune=...)`` on the
+    long-running table) / ``{"key_slices": k}`` / ``{"grid_slices":
+    (kk, tk)}``. The default (None) PRESERVES whatever clustering the
+    table already has (a restarted stream that omits it must not un-slice
+    the layout its previous run built).
 
     ``views``: IncrementalAggViews (lake/view.py) refreshed after every
     merge — idempotency is watermark-based, not commit-keyed: a replayed
@@ -92,17 +89,7 @@ def run_stream(
     watermark and no-ops (per-refresh commit keys are deliberately not
     used; they would grow view metadata O(refreshes)), so the downstream
     marts stay exactly-once along with the table."""
-    if compact_ts_slices is not None and compact_layout is not None:
-        raise ValueError(
-            "pass compact_ts_slices OR compact_layout, not both"
-        )
-    layout: dict = (
-        dict(compact_layout)
-        if compact_layout is not None
-        else {"ts_slices": compact_ts_slices}
-        if compact_ts_slices is not None
-        else {}
-    )
+    layout = dict(compact_layout or {})
     if layout:
         # validate the slicing request NOW (schema/axis checks), not
         # inside foreachBatch at the first cadence firing N committed

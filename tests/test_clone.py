@@ -496,8 +496,8 @@ def test_rebase_crash_after_merge_recovers_frontier_keys(spark, tmp_path):
     rebase_branch call completes the fold, after which the replay
     no-ops."""
     from postgres_to_snowflake_data_pipeline_spark.cdc.apply import (
-        _dedup_storage,
         _normalize_batch,
+        lww_dedup,
         rebase_branch,
     )
 
@@ -513,7 +513,7 @@ def test_rebase_crash_after_merge_recovers_frontier_keys(spark, tmp_path):
     feed = src.changes(base, until_snapshot_id=head, skip_rolled_back=True)
     schema, events, obs_fn = _normalize_batch(branch, feed, "crash-sim")
     branch.merge(
-        _dedup_storage(events, schema, branch.current(), 0),
+        lww_dedup(events, schema, branch.current(), 0),
         schema=schema,
         summary={"rebase_from": base, "rebase_to": head},
         summary_fn=obs_fn,

@@ -30,9 +30,7 @@ def test_changes_returns_only_new_commits(spark, tmp_path):
 
     delta = table.changes(since_snapshot_id=mid)
     # epoch 1 winners only: one row per key of e2, op upsert/delete
-    from postgres_to_snowflake_data_pipeline_spark.cdc.dedup import lww_dedup
-
-    exp = lww_dedup(e2).count()
+    exp = e2.select("conv_id", "turn_idx").distinct().count()
     assert delta.count() == exp
     assert set(r["op"] for r in delta.select("op").distinct().collect()) <= {
         "upsert",

@@ -6,7 +6,8 @@ images (reference analog: the reference re-ships FULL rows on every load,
 a WAL-tail engine needs that a batch reloader never sees). Tables declare
 ``patch.columns`` + ``patch.sentinel`` via props; the engine must carry
 stored values forward per COLUMN, across epochs, deletes and compaction
-(cdc/dedup.py::lww_patch_dedup + lake/table.py::_resolve_patch).
+(cdc/apply.py::lww_dedup projects a batch to storage shape;
+lake/table.py::resolve_lww resolves it, reads and compaction alike).
 """
 
 from __future__ import annotations
@@ -19,10 +20,10 @@ from pyspark.sql import functions as F
 from postgres_to_snowflake_data_pipeline_spark.cdc.apply import (
     apply_batch,
     bootstrap_snapshot,
+    lww_dedup,
     replay_feed,
     reprocess_quarantined,
 )
-from postgres_to_snowflake_data_pipeline_spark.cdc.dedup import lww_patch_dedup
 from postgres_to_snowflake_data_pipeline_spark.cdc.generator import change_events, write_feed
 from postgres_to_snowflake_data_pipeline_spark.cdc.schemas import (
     CHANGE_EVENT_SCHEMA,
@@ -113,7 +114,8 @@ def test_delete_kills_patched_values_no_resurrection(spark, tmp_path):
     assert _state(table) == {("a", 0): ("u2", None, None)}
 
 
-def test_delete_and_recreate_within_one_batch(spark, tmp_path):
+@pytest.mark.parametrize("salt_buckets", [0, 8])
+def test_delete_and_recreate_within_one_batch(spark, tmp_path, salt_buckets):
     table = _patch_table(spark, tmp_path / "t")
     apply_batch(spark, table, _feed(spark, [
         (1, "insert", "a", 0, "u", "old", "t1"),
@@ -121,10 +123,19 @@ def test_delete_and_recreate_within_one_batch(spark, tmp_path):
     # one batch folds delete + re-create: the collapsed storage row must
     # still know "old" was destroyed (the _dlsn internals), and the new
     # set of tool at lsn 4 must survive the folded delete at lsn 3
-    apply_batch(spark, table, _feed(spark, [
+    batch = _feed(spark, [
+        (2, "update", "a", 0, "u", "mid", SENT),
         (3, "delete", "a", 0, None, None, None),
         (4, "insert", "a", 0, "u2", SENT, "t9"),
-    ]), epoch=1)
+    ])
+    # the in-batch kill: the storage row already drops the text set at
+    # lsn 2 that the folded delete destroyed (NULL value and set-LSN)
+    (row,) = lww_dedup(
+        batch, table.schema(), table.current(), salt_buckets
+    ).collect()
+    assert (row["text"], row["_plsn_text"], row["_dlsn"]) == (None, None, 3)
+    assert (row["tool"], row["_plsn_tool"], row["_lsn"]) == ("t9", 4, 4)
+    apply_batch(spark, table, batch, epoch=1, salt_buckets=salt_buckets)
     assert _state(table) == {("a", 0): ("u2", None, "t9")}
 
 
@@ -239,12 +250,22 @@ def test_patch_replay_matches_naive_oracle(spark, tmp_path):
     assert _state(table) == expected
 
 
-def test_salted_patch_dedup_equals_unsalted(spark):
-    events = _to_patch_feed(change_events(spark, 4000, n_convs=50))
-    a = lww_patch_dedup(events, ("conv_id", "turn_idx"), ("text", "tool"), SENT)
-    b = lww_patch_dedup(
-        events, ("conv_id", "turn_idx"), ("text", "tool"), SENT, salt_buckets=8
-    )
+@pytest.mark.parametrize("patch", [False, True], ids=["plain", "patch"])
+def test_salted_dedup_equals_unsalted(spark, tmp_path, patch):
+    events = change_events(spark, 4000, n_convs=50)
+    if patch:
+        events = _to_patch_feed(events)
+        table = _patch_table(spark, tmp_path / "t")
+    else:
+        table = LakeTable.create(
+            spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA,
+            key_cols=("conv_id", "turn_idx"), n_buckets=4,
+        )
+    snap = table.current()
+    a = lww_dedup(events, table.schema(), snap, 0)
+    b = lww_dedup(events, table.schema(), snap, 8)
+    assert a.columns == b.columns
+    assert ("_dlsn" in a.columns) == patch
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 

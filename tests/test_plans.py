@@ -14,9 +14,14 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from postgres_to_snowflake_data_pipeline_spark.cdc.dedup import lww_dedup
+from postgres_to_snowflake_data_pipeline_spark.cdc.apply import lww_dedup
 from postgres_to_snowflake_data_pipeline_spark.cdc.generator import change_events
-from postgres_to_snowflake_data_pipeline_spark.lake.table import bucket_expr
+from postgres_to_snowflake_data_pipeline_spark.cdc.schemas import TRANSCRIPT_SCHEMA
+from postgres_to_snowflake_data_pipeline_spark.lake.table import (
+    LakeTable,
+    bucket_expr,
+    resolve_lww,
+)
 from postgres_to_snowflake_data_pipeline_spark.plans.inspect import (
     explain_str,
     has_broadcast_join,
@@ -76,31 +81,32 @@ def test_t05_dedup_reads_only_needed_columns(spark, sf_dir):
     assert set(scan) == {"doc_id", "text"}
 
 
-def test_bucket_aligned_dedup_single_exchange(spark):
+def _table(spark, root, **props):
+    return LakeTable.create(
+        spark, str(root), TRANSCRIPT_SCHEMA, ("conv_id", "turn_idx"),
+        n_buckets=16, props=props or None,
+    )
+
+
+def test_bucket_aligned_dedup_single_exchange(spark, tmp_path):
     """The merge-path contract: repartition by bucket + groupBy(bucket, key)
     must produce exactly ONE shuffle (Catalyst recognizes the bucket
     partitioning satisfies the aggregation's clustering requirement)."""
     ev = change_events(spark, 10_000, n_convs=100)
-    b = ev.withColumn("_bucket", bucket_expr("conv_id", 16)).repartition(
-        16, F.col("_bucket")
-    )
-    w = lww_dedup(b, ("_bucket", "conv_id", "turn_idx"))
+    t = _table(spark, tmp_path / "t")
+    w = lww_dedup(ev, t.schema(), t.current(), 0)
     assert n_exchanges(w) == 1, explain_str(w)
+    assert "ObjectHashAggregate" not in explain_str(w)
 
 
-def test_bucket_aligned_patch_dedup_single_exchange(spark):
+def test_bucket_aligned_patch_dedup_single_exchange(spark, tmp_path):
     """The partial-update reduction keeps the fused-shuffle contract: its
-    extra per-column aggregates are more columns in the SAME Tungsten hash
-    aggregate, never a second exchange."""
-    from postgres_to_snowflake_data_pipeline_spark.cdc.dedup import lww_patch_dedup
-
+    extra per-column aggregates are more columns in the SAME aggregate,
+    never a second exchange."""
     ev = change_events(spark, 10_000, n_convs=100)
-    b = ev.withColumn("_bucket", bucket_expr("conv_id", 16)).repartition(
-        16, F.col("_bucket")
-    )
-    w = lww_patch_dedup(
-        b, ("_bucket", "conv_id", "turn_idx"), ("text", "tool"), "__unchanged__"
-    )
+    t = _table(spark, tmp_path / "t", **{"patch.columns": ["text", "tool"]})
+    w = lww_dedup(ev, t.schema(), t.current(), 0)
+    assert "_plsn_text" in w.columns and "_dlsn" in w.columns
     assert n_exchanges(w) == 1, explain_str(w)
     assert "ObjectHashAggregate" not in explain_str(w)
 
@@ -131,9 +137,15 @@ def test_salted_apply_writes_one_delta_file_per_bucket(spark, tmp_path):
 def test_naive_dedup_would_double_shuffle(spark):
     """Control for the test above: dedup then bucket-repartition (the naive
     plan) costs two full-row exchanges."""
-    ev = change_events(spark, 10_000, n_convs=100)
-    w = lww_dedup(ev).withColumn("_bucket", bucket_expr("conv_id", 16))
-    w2 = w.repartition(16, F.col("_bucket"))
+    ev = change_events(spark, 10_000, n_convs=100).select(
+        *TRANSCRIPT_SCHEMA.fieldNames(),
+        F.col("lsn").alias("_lsn"),
+        (F.col("op") == "delete").alias("_deleted"),
+    )
+    w = resolve_lww(ev, ["conv_id", "turn_idx"])
+    w2 = w.withColumn("_bucket", bucket_expr("conv_id", 16)).repartition(
+        16, F.col("_bucket")
+    )
     assert n_exchanges(w2) == 2
 
 

@@ -37,14 +37,14 @@ def _spec(tmp_path):
     )
 
 
-def _land(spark, feed_dir, df, name):
+def _land(spark, feed_dir, df, name, ddl=SCHEMA_DDL):
     """Land one parquet FILE atomically (write-then-rename, the producer
     contract run_scheduled documents)."""
     from pyspark.sql import types as T
 
     tmp = str(feed_dir) + f".tmp-{name}"
     df.select(
-        *[f.name for f in T._parse_datatype_string(SCHEMA_DDL).fields]
+        *[f.name for f in T._parse_datatype_string(ddl).fields]
     ).coalesce(1).write.mode("overwrite").parquet(tmp)
     os.makedirs(feed_dir, exist_ok=True)
     part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
@@ -200,3 +200,71 @@ def test_skip_shelves_files_without_consuming_the_epoch(
     assert ticks2[0]["files"] == ["good.parquet"]
     assert ticks2[0]["epoch"] == ticks[0]["epoch"]
     assert pipe.tables["ta"].has_commit_key(f"epoch:{ticks2[0]['epoch']}")
+
+
+def test_skip_after_partial_commit_consumes_the_epoch(
+    spark, tmp_path, events, monkeypatch
+):
+    """A batch that committed epoch:{n} on one table before failing on the
+    next must not hand n to the next good batch under on_exhausted='skip':
+    the committed table would skip that batch as a replay and lose it.
+    The epoch is consumed (an empty epoch:{n} folds on the table that
+    lacks it) and the next good batch lands on BOTH tables."""
+    from postgres_to_snowflake_data_pipeline_spark.lake.table import LakeTable
+
+    ddl = SCHEMA_DDL + ", _table string"
+    routed = events.withColumn(
+        "_table", F.when(F.col("turn_idx") % 2 == 0, "ta").otherwise("tb")
+    )
+    half = F.crc32("conv_id") % 2 == 0  # bad and good batches share no key
+    feed = tmp_path / "feed"
+    _land(spark, feed, routed.filter(half), "bad.parquet", ddl)
+    spec = PipelineSpec.from_dict(
+        {
+            "lake_root": str(tmp_path / "lake"),
+            "sources": [{"name": "wal", "kind": "dataframe"}],
+            "tables": [
+                {"name": n, "key_cols": ["conv_id", "turn_idx"],
+                 "n_buckets": 4}
+                for n in ("ta", "tb")
+            ],
+        }
+    )
+    pipe = Pipeline(spark, spec)
+    schema = spark.createDataFrame([], ddl).schema
+
+    real_merge = LakeTable.merge
+
+    def tb_down(self, *a, **k):
+        if self.root.endswith("tb"):
+            raise RuntimeError("tb merge down")
+        return real_merge(self, *a, **k)
+
+    monkeypatch.setattr(LakeTable, "merge", tb_down)
+    ticks = pipe.run_scheduled(
+        str(feed), schema, str(tmp_path / "ckpt"),
+        retries=0, on_exhausted="skip", max_ticks=1, sleep=lambda s: None,
+    )
+    bad_epoch = ticks[0]["epoch"]
+    assert ticks[0]["skipped"] and ticks[0]["partial_tables"] == ["ta"]
+    state = json.load(open(tmp_path / "ckpt" / "schedule.json"))
+    assert state["skipped"][0]["partial_tables"] == ["ta"]
+    assert pipe.tables["tb"].has_commit_key(f"epoch:{bad_epoch}")
+
+    monkeypatch.setattr(LakeTable, "merge", real_merge)
+    good = routed.filter(~half)
+    _land(spark, feed, good, "good.parquet", ddl)
+    ticks2 = pipe.run_scheduled(
+        str(feed), schema, str(tmp_path / "ckpt"),
+        max_ticks=2, stop_when_idle=True, sleep=lambda s: None,
+    )
+    assert ticks2[0]["files"] == ["good.parquet"]
+    assert ticks2[0]["epoch"] == bad_epoch + 1
+    for name in ("ta", "tb"):
+        want = good.filter(F.col("_table") == name).select(
+            "conv_id", "turn_idx"
+        ).distinct()
+        got = pipe.tables[name].read(include_tombstones=True).select(
+            "conv_id", "turn_idx"
+        )
+        assert want.count() > 0 and want.exceptAll(got).count() == 0, name

@@ -7,8 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from postgres_to_snowflake_data_pipeline_spark.cdc.apply import apply_batch
-from postgres_to_snowflake_data_pipeline_spark.cdc.dedup import lww_dedup
+from postgres_to_snowflake_data_pipeline_spark.cdc.apply import apply_batch, lww_dedup
 from postgres_to_snowflake_data_pipeline_spark.cdc.generator import (
     change_events,
     hot_key_feed,
@@ -34,11 +33,18 @@ def test_extreme_skew_correctness(spark, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def test_dedup_plan_has_map_side_partial_aggregation(spark):
-    """The unsalted path is skew-safe because Catalyst plans
-    a partial aggregate before the exchange — assert that stays true."""
+def _table(spark, root):
+    return LakeTable.create(spark, str(root), TRANSCRIPT_SCHEMA,
+                            ("conv_id", "turn_idx"), n_buckets=8)
+
+
+def test_dedup_plan_has_map_side_partial_aggregation(spark, tmp_path):
+    """The salted path is skew-safe because Catalyst plans a partial
+    aggregate before the first exchange (a hot key collapses per input
+    partition before any data moves) — assert that stays true."""
     events = change_events(spark, 1000, n_convs=10)
-    plan = explain_str(lww_dedup(events))
+    t = _table(spark, tmp_path / "t")
+    plan = explain_str(lww_dedup(events, t.schema(), t.current(), 8))
     exchange_pos = plan.find("Exchange")
     assert exchange_pos != -1, "expected a shuffle in the dedup plan"
     pre_shuffle = plan[exchange_pos:]
@@ -47,9 +53,10 @@ def test_dedup_plan_has_map_side_partial_aggregation(spark):
     )
 
 
-def test_salted_dedup_plan_has_two_aggregations(spark):
+def test_salted_dedup_plan_has_two_aggregations(spark, tmp_path):
     events = change_events(spark, 1000, n_convs=10)
-    plan = explain_str(lww_dedup(events, salt_buckets=8))
+    t = _table(spark, tmp_path / "t")
+    plan = explain_str(lww_dedup(events, t.schema(), t.current(), 8))
     assert plan.count("Exchange") >= 2, "salted dedup should have two shuffles"
 
 

@@ -122,14 +122,14 @@ def test_file_count_compaction_trigger_bounds_read_amplification(spark, setup):
 
 
 def test_stream_time_clustered_compaction(spark, setup):
-    """compact_ts_slices rides the streaming cadence trigger: after the
+    """A ts_slices layout rides the streaming cadence trigger: after the
     drain the buckets hold one pass's lww_group-tagged slices, the state
     still matches the oracle, and a follow-up compact() treats the sliced
     buckets as already folded."""
     events, feed, table, ckpt, _ = setup
     q = run_stream(spark, table, feed, CHANGE_EVENT_SCHEMA, ckpt,
                    max_files_per_trigger=2, compact_every=2,
-                   compact_ts_slices=3)
+                   compact_layout={"ts_slices": 3})
     assert q.awaitTermination(300), "stream did not drain within deadline"
     assert_matches_oracle(table.read(), events, PAYLOAD)
     snap = table.current()
@@ -141,7 +141,7 @@ def test_stream_time_clustered_compaction(spark, setup):
 
 
 def test_stream_restart_without_flag_preserves_slicing(spark, tmp_path):
-    """A restarted stream that omits compact_ts_slices must not un-slice
+    """A restarted stream that omits compact_layout must not un-slice
     the layout its previous run built (default None = preserve)."""
     events = change_events(spark, 6000, n_convs=300)
     feed = str(tmp_path / "feed")
@@ -153,7 +153,7 @@ def test_stream_restart_without_flag_preserves_slicing(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     q = run_stream(spark, table, feed, CHANGE_EVENT_SCHEMA, ckpt,
                    max_files_per_trigger=2, compact_every=1,
-                   compact_ts_slices=3)
+                   compact_layout={"ts_slices": 3})
     assert q.awaitTermination(300), "stream did not drain within deadline"
     # more feed arrives; the operator restarts WITHOUT the flag
     extra = change_events(spark, 2000, n_convs=300, seed=77)
@@ -174,12 +174,9 @@ def test_stream_restart_without_flag_preserves_slicing(spark, tmp_path):
 
 def test_stream_compact_layout_grid(spark, setup):
     """The general compact_layout form rides the same cadence: a grid
-    layout folds the stream's buckets with tight ranges on both axes,
-    state stays oracle-equal, and passing both layout params is loud."""
+    layout folds the stream's buckets with tight ranges on both axes and
+    state stays oracle-equal."""
     events, feed, table, ckpt, _ = setup
-    with pytest.raises(ValueError, match="not both"):
-        run_stream(spark, table, feed, CHANGE_EVENT_SCHEMA, ckpt,
-                   compact_ts_slices=2, compact_layout={"key_slices": 2})
     q = run_stream(spark, table, feed, CHANGE_EVENT_SCHEMA, ckpt,
                    max_files_per_trigger=2, compact_every=2,
                    compact_layout={"grid_slices": [3, 2]})

@@ -58,14 +58,22 @@ def child(cores: int, feed_path: str, n_events: int) -> None:
         return
 
     # warm codegen/JIT for the scan→dedup→write path before timing
-    from postgres_to_snowflake_data_pipeline_spark.cdc.dedup import lww_dedup
+    from postgres_to_snowflake_data_pipeline_spark.cdc.apply import lww_dedup
 
     wpath = os.path.join(tempfile.gettempdir(), f"scal-warm-{cores}")
-    shutil.rmtree(wpath, ignore_errors=True)
+    for p in (wpath, wpath + "-table"):
+        shutil.rmtree(p, ignore_errors=True)
     warm = change_events(spark, 200_000, n_convs=1_000, num_partitions=8)
-    lww_dedup(warm).write.mode("overwrite").parquet(wpath)
+    wtable = LakeTable.create(
+        spark, wpath + "-table", TRANSCRIPT_SCHEMA,
+        key_cols=("conv_id", "turn_idx"), n_buckets=128,
+    )
+    lww_dedup(warm, wtable.schema(), wtable.current(), 0).write.mode(
+        "overwrite"
+    ).parquet(wpath)
     spark.read.parquet(wpath).count()
-    shutil.rmtree(wpath, ignore_errors=True)
+    for p in (wpath, wpath + "-table"):
+        shutil.rmtree(p, ignore_errors=True)
 
     # median of TRIALS replays in one JVM: the ratio of two single
     # measurements is dominated by hypervisor-steal noise (identical code
