@@ -299,7 +299,6 @@ def apply_batch(
     table: LakeTable,
     events: DataFrame,
     epoch: int,
-    lineage_path: str | None = None,
     salt_buckets: int | None = None,
     stage: str | None = None,
     props_update: dict | None = None,
@@ -423,11 +422,6 @@ def apply_batch(
         return ApplyResult(epoch, True, 0, 0, None)
     rows_in = snap.summary.get("rows_in") or 0
     rows_deduped = sum(r["rows_merged"] for r in snap.summary.get("bucket_lineage", []))
-
-    # ---- 5. optional materialized lineage mirror (derived, best-effort —
-    # the authoritative record is the snapshot log; see lineage_df())
-    if lineage_path is not None:
-        export_lineage(spark, table, lineage_path)
 
     return ApplyResult(epoch, False, rows_in, rows_deduped, snap.snapshot_id)
 
@@ -914,7 +908,6 @@ def replay_feed(
     table: LakeTable,
     feed_path: str,
     epochs: int,
-    lineage_path: str | None = None,
     compact_every: int = 8,
     salt_buckets: int | None = None,
 ) -> list[ApplyResult]:
@@ -930,8 +923,7 @@ def replay_feed(
         b = hi + 1 if e == epochs - 1 else lo + (e + 1) * step
         batch = feed.filter((F.col(ORDER_COL) >= a) & (F.col(ORDER_COL) < b))
         results.append(
-            apply_batch(spark, table, batch, epoch=e, lineage_path=lineage_path,
-                        salt_buckets=salt_buckets)
+            apply_batch(spark, table, batch, epoch=e, salt_buckets=salt_buckets)
         )
         if compact_every and (e + 1) % compact_every == 0:
             table.compact()

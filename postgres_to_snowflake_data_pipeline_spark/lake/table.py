@@ -1009,13 +1009,9 @@ class LakeTable:
             if not fs:
                 buckets[bi] = {"live": 0, "deleted": 0, "via": "stats"}
                 continue
-            groups = {e.get("lww_group") for e in fs}
-            one_pass = all(e.get("kind") == "base" for e in fs) and (
-                len(fs) == 1 or (len(groups) == 1 and None not in groups)
-            )
             countable = (
                 not patch
-                and (one_pass or len(fs) == 1)
+                and (len(fs) == 1 or self._one_pass(fs))
                 and all(e.get("del_rows") is not None for e in fs)
             )
             if countable:
@@ -3899,11 +3895,7 @@ class LakeTable:
                 buckets_dropped += 1
                 files_dropped += len(fs)
                 continue
-            groups = {e.get("lww_group") for e in fs}
-            one_pass = all(e.get("kind") == "base" for e in fs) and (
-                len(fs) == 1 or (len(groups) == 1 and None not in groups)
-            )
-            if one_pass:
+            if self._one_pass(fs):
                 kept = [e for e in fs if not dead(e)]
                 strad = [e for e in kept if not clean(e)]
                 files_dropped += len(fs) - len(kept)
@@ -4222,7 +4214,6 @@ class LakeTable:
         buckets: list[int] | None = None,
         ts_slices: int | None = None,
         key_slices: int | None = None,
-        grid_slices: tuple[int, int] | None = None,
     ) -> Snapshot:
         """Fold delta files into per-bucket base files (copy-on-write).
 
@@ -4245,7 +4236,7 @@ class LakeTable:
         slicing is orthogonal to key order), so ``read_key`` opens up to
         ``ts_slices`` files instead of one.
 
-        ``key_slices > 1`` is the ALTERNATIVE layout axis — KEY-CLUSTERED
+        ``key_slices > 1`` is the second layout axis — KEY-CLUSTERED
         output: each bucket's resolved rows are split at bucketing-key
         quantiles (dense rank over ``key_cols[0]``, so one key never
         straddles two files) into up to ``key_slices`` base files with
@@ -4256,74 +4247,38 @@ class LakeTable:
         4096-bucket table otherwise folds into ~24 GB single files). The
         trade-off mirrors time clustering: every slice spans the bucket's
         whole ts range, so ``read(ts_prune=...)`` cannot skip within the
-        bucket. Pick the axis per table from its read mix; the two are
-        mutually exclusive in one pass (both > 1 raises).
+        bucket.
 
-        ``grid_slices=(key_bands, ts_bands)`` is the BALANCED layout for
+        The two axes are independent. Both > 1 is the GRID layout for
         MIXED read workloads — the slice grid a Z-order curve degenerates
-        to at file granularity: each bucket's resolved rows are first
-        banded at key quantiles (dense rank, one key never straddles
-        bands), then each key band is cut at the pass's event-time
-        quantiles, producing up to ``key_bands × ts_bands`` files whose
-        manifest entries carry TIGHT ranges on BOTH axes. A point lookup
-        opens one key band (= ``1/key_bands`` of the bucket's bytes,
-        fanned across its ts slices); a time window opens one ts band
-        per key band (= ``~1/ts_bands`` of the bytes). Neither axis gets
-        the single-axis layout's optimum, but neither gets its
-        pathology — the trade-off table is measured in BENCH.md §6f.
+        to at file granularity: each key band is cut at the pass's
+        event-time quantiles, producing up to ``key_slices × ts_slices``
+        files whose manifest entries carry TIGHT ranges on BOTH axes. A
+        point lookup opens one key band (= ``1/key_slices`` of the
+        bucket's bytes, fanned across its ts slices); a time window opens
+        one ts band per key band (= ``~1/ts_slices`` of the bytes).
+        Neither axis gets the single-axis layout's optimum, but neither
+        gets its pathology — the trade-off table is measured in BENCH.md
+        §6f. Pick the axes per table from its read mix.
 
-        ``ts_slices=None and key_slices=None and grid_slices=None``
-        (default) PRESERVES the table's existing clustering PER BUCKET —
-        each bucket's effective k per axis is the max ``ts_k`` / ``key_k``
-        its current base entries carry (a grid bucket carries both) — so
-        a default-args maintenance ``compact()`` (e.g. ``replay_feed``'s
-        cadence) never silently un-slices a clustered table, and a table
-        whose buckets sit on DIFFERENT layouts (a partial explicit
-        rewrite) folds each layout group separately instead of wedging
-        the cadence. An EXPLICIT slicing arg is a COMPLETE layout
-        request: it sets BOTH axes (the unnamed one to 1), and buckets
-        folded at a different layout are rewritten. Explicit time
-        clustering (``ts_slices > 1`` or a grid) on a schema with no
+        ``ts_slices=None and key_slices=None`` (default) PRESERVES the
+        table's existing clustering PER BUCKET — each bucket's effective
+        k per axis is the max ``ts_k`` / ``key_k`` its current base
+        entries carry — so a default-args maintenance ``compact()`` (e.g.
+        ``replay_feed``'s cadence) never silently un-slices a clustered
+        table, and a table whose buckets sit on DIFFERENT layouts (a
+        partial explicit rewrite) folds each layout group separately
+        instead of wedging the cadence. An EXPLICIT slicing arg is a
+        COMPLETE layout request: it sets BOTH axes (an unnamed one to 1),
+        and buckets folded at a different layout are rewritten. Explicit
+        time clustering (``ts_slices > 1``) on a schema with no
         timestamp column raises (mirroring ``read(ts_prune=...)``)."""
-        if grid_slices is not None:
-            # accept any 2-sequence (JSON specs deliver lists) and reject
-            # wrong shapes LOUDLY here — every caller (streaming cadence,
-            # pipeline maintenance, upfront spec validation) funnels
-            # through this one check instead of pre-normalizing
-            grid_slices = tuple(grid_slices)  # type: ignore[arg-type]
-            if len(grid_slices) != 2:
-                raise ValueError(
-                    "compact: grid_slices must be (key_bands, ts_bands), "
-                    f"got {grid_slices!r}"
-                )
         snap = self.current()
         zcol = self._zone_ts_col(snap.schema)
-        explicit_axes = sum(
-            1
-            for v in (ts_slices, key_slices)
-            if v is not None and v > 1
-        ) + (1 if grid_slices is not None else 0)
-        if explicit_axes > 1:
-            raise ValueError(
-                "compact: ts_slices / key_slices / grid_slices are "
-                "alternative layout requests — pass only one"
-            )
-        if (
-            ts_slices is not None
-            or key_slices is not None
-            or grid_slices is not None
-        ):
+        if ts_slices is not None or key_slices is not None:
             # explicit layout request: both axes pinned
-            if grid_slices is not None:
-                want_kk, want_k = (
-                    max(int(grid_slices[0]), 1),
-                    max(int(grid_slices[1]), 1),
-                )
-            else:
-                want_k = max(int(ts_slices), 1) if ts_slices is not None else 1
-                want_kk = (
-                    max(int(key_slices), 1) if key_slices is not None else 1
-                )
+            want_k = max(int(ts_slices or 1), 1)
+            want_kk = max(int(key_slices or 1), 1)
             if want_k > 1 and zcol is None:
                 raise ValueError(
                     "compact: time clustering requested but the schema has "
@@ -4333,8 +4288,7 @@ class LakeTable:
             # preserve the existing clustering PER BUCKET (partial explicit
             # rewrites may have left buckets on different layouts — a mixed
             # table must not wedge the unattended maintenance cadence, so
-            # each group folds at its own layout via recursion; a bucket
-            # carrying both axes is the grid layout, folded as such)
+            # each group folds at its own layout via recursion)
             layouts: dict[str, tuple[int, int] | None] = {}
             pool: list[tuple[int, int]] = []
             for b, fs in snap.files.items():
@@ -4368,14 +4322,9 @@ class LakeTable:
                     bs = [
                         int(b) for b, lay in layouts.items() if lay == (k, kk)
                     ]
-                    if k > 1 and kk > 1:
-                        out_snap = self.compact(
-                            buckets=bs, grid_slices=(kk, k)
-                        )
-                    elif kk > 1:
-                        out_snap = self.compact(buckets=bs, key_slices=kk)
-                    else:
-                        out_snap = self.compact(buckets=bs, ts_slices=k)
+                    out_snap = self.compact(
+                        buckets=bs, ts_slices=k, key_slices=kk
+                    )
                 return out_snap
             want_k, want_kk = next(iter(scoped), (1, 1))
         todo = []
@@ -4384,19 +4333,17 @@ class LakeTable:
                 continue
             if not fs:
                 continue
-            groups = {e.get("lww_group") for e in fs}
             # a bucket is folded AT THE REQUESTED k when all its files are
-            # one pass's slices (or a lone pre-group base) sliced at k —
-            # without this, a ts-sliced bucket would be pointlessly
-            # rewritten every compact(), and an explicit re-slice request
-            # (different k) would silently no-op
-            one_pass = len(fs) <= 1 or (len(groups) == 1 and None not in groups)
+            # one pass's slices (or a lone base) sliced at k — without
+            # this, a ts-sliced bucket would be pointlessly rewritten every
+            # compact(), and an explicit re-slice request (different k)
+            # would silently no-op
             folded = (
-                one_pass
+                self._one_pass(fs)
                 and {e.get("ts_k", 1) for e in fs} == {want_k}
                 and {e.get("key_k", 1) for e in fs} == {want_kk}
             )
-            if any(e.get("kind") == "delta" for e in fs) or not folded:
+            if not folded:
                 todo.append(int(b))
         if not todo:
             return snap
@@ -4419,59 +4366,44 @@ class LakeTable:
             ts_col_id=snap.column_ids.get(zcol) if zcol else None,
             content=self._content_spec(snap),
         )
-        if want_k > 1 and want_kk > 1 and zcol is not None:
-            # GRID: key bands (dense rank — one key never straddles bands)
-            # × event-time bands within each, ONE write partitioned by
-            # (slice, bucket). Slice index = key_band * ts_bands + ts_band;
-            # per-subdir entry collection gives each file tight stats on
-            # BOTH axes with the machinery unchanged. Null ts rides band 0.
-            df, ksl, helper = self._key_slice_frame(
-                df, snap.key_cols[0], want_kk
-            )
-            us = F.unix_micros(F.col(zcol).cast("timestamp")).cast("double")
-            df = df.withColumn("_us", us).persist()
+        if want_k > 1 or want_kk > 1:
+            # ONE write partitioned by (slice, bucket). Slice index =
+            # key_band * ts_bands + ts_band: key bands come from the dense
+            # rank (one key never straddles bands), ts bands from the
+            # pass's event-time quantiles (null ts rides band 0). Entries
+            # are collected per slice subdir, so each file carries tight
+            # stats on both axes with the stats machinery unchanged. An
+            # axis at 1 costs nothing: no window, no quantile job.
+            ksl, helper = F.lit(0), []
+            if want_kk > 1:
+                df, ksl, helper = self._key_slice_frame(
+                    df, snap.key_cols[0], want_kk
+                )
+            bounds: list[float] = []
+            if want_k > 1:
+                us = F.unix_micros(F.col(zcol).cast("timestamp"))
+                df = df.withColumn("_us", us.cast("double")).persist()
+                helper = helper + ["_us"]
             try:
-                probs = [i / want_k for i in range(1, want_k)]
-                bounds = sorted(set(df.stat.approxQuantile("_us", probs, 0.001)))
+                if want_k > 1:
+                    probs = [i / want_k for i in range(1, want_k)]
+                    bounds = sorted(
+                        set(df.stat.approxQuantile("_us", probs, 0.001))
+                    )
                 tsl = F.lit(0)
                 for i, bnd in enumerate(bounds):
+                    # null _us: the comparison is null -> otherwise -> 0
                     tsl = F.when(
                         F.col("_us") >= F.lit(bnd), F.lit(i + 1)
                     ).otherwise(tsl)
                 sl = (ksl.cast("long") * (len(bounds) + 1) + tsl).cast("int")
                 raw = self._write_sliced(
-                    df, sl, helper + ["_us"], commit_dir,
+                    df, sl, helper, commit_dir,
                     want_kk * (len(bounds) + 1), stat_kwargs,
                 )
             finally:
-                df.unpersist()
-        elif want_k > 1 and zcol is not None:
-            # ONE write, partitioned by (slice, bucket): the slice index
-            # comes from event-time quantiles of the resolved rows, and
-            # entries are collected per slice subdir so each carries THAT
-            # slice's ts range — the stats machinery is unchanged. Null
-            # ts rows ride slice 0.
-            us = F.unix_micros(F.col(zcol).cast("timestamp")).cast("double")
-            df = df.withColumn("_us", us).persist()
-            try:
-                probs = [i / want_k for i in range(1, want_k)]
-                bounds = sorted(set(df.stat.approxQuantile("_us", probs, 0.001)))
-                sl = F.lit(0)
-                for i, bnd in enumerate(bounds):
-                    # null _us: the comparison is null -> otherwise -> 0
-                    sl = F.when(F.col("_us") >= F.lit(bnd), F.lit(i + 1)).otherwise(sl)
-                raw = self._write_sliced(
-                    df, sl, ["_us"], commit_dir, len(bounds) + 1, stat_kwargs
-                )
-            finally:
-                df.unpersist()
-        elif want_kk > 1:
-            df, sl, helper = self._key_slice_frame(
-                df, snap.key_cols[0], want_kk
-            )
-            raw = self._write_sliced(
-                df, sl, helper, commit_dir, want_kk, stat_kwargs
-            )
+                if want_k > 1:
+                    df.unpersist()
         else:
             raw, _stats = self._write_data(df, commit_dir, **stat_kwargs)
         new_files = {
@@ -4523,7 +4455,7 @@ class LakeTable:
     ) -> DataFrame:
         """The compaction shuffle: hash-distribute by ``_bucket`` and sort
         each partition by (bucket, key...) — the ONE exchange every fold
-        layout (plain, ts-sliced, key-sliced) reuses."""
+        layout (plain or sliced on either axis) reuses."""
         return df.repartition(max(n_todo // 4, 1), "_bucket").sortWithinPartitions(
             "_bucket", *key_cols
         )
@@ -4552,6 +4484,18 @@ class LakeTable:
             (F.col("_dr").cast("long") - 1) * key_slices / F.col("_nd")
         ).cast("int")
         return df, sl, ["_dr", "_nd"]
+
+    @staticmethod
+    def _one_pass(fs: list[dict[str, Any]]) -> bool:
+        """A bucket's entries are ONE fold's output: all ``kind='base'``,
+        and either a lone file or every file sharing one non-null
+        ``lww_group`` (one compaction pass's slices). Each key then holds
+        exactly one storage row in the bucket and no read-time LWW is
+        needed across its files."""
+        groups = {e.get("lww_group") for e in fs}
+        return all(e.get("kind") == "base" for e in fs) and (
+            len(fs) == 1 or (len(groups) == 1 and None not in groups)
+        )
 
     @staticmethod
     def _bucket_layout(
@@ -4597,10 +4541,12 @@ class LakeTable:
         n_slices: int,
         stat_kwargs: dict[str, Any],
     ) -> dict[str, list[dict[str, Any]]]:
-        """The shared sliced-compaction write: ONE job partitioned by
-        (slice, bucket) — only the slice-index expression differs between
-        the ts- and key-clustered layouts — then per-subdir entry
-        collection."""
+        """The sliced-compaction write: ONE job partitioned by (slice,
+        bucket), then per-bucket manifest entries collected per slice
+        subdir (``_sdir=i/_bdir=b``) so each carries THAT slice's
+        key/ts/lsn stats — the stats machinery is unchanged. Missing
+        subdirs (empty slices: duplicate quantile bounds, fewer distinct
+        keys than slices) are skipped."""
         out = os.path.join(self.root, commit_dir)
         with _pinned_parquet_writes(self.spark):
             (
@@ -4611,20 +4557,6 @@ class LakeTable:
                 .mode("overwrite")
                 .parquet(out)
             )
-        return self._collect_sliced(out, commit_dir, n_slices, stat_kwargs)
-
-    def _collect_sliced(
-        self,
-        out: str,
-        commit_dir: str,
-        n_slices: int,
-        stat_kwargs: dict[str, Any],
-    ) -> dict[str, list[dict[str, Any]]]:
-        """Per-bucket manifest entries for a sliced compaction write
-        (``_sdir=i/_bdir=b`` layout): entries are collected per slice
-        subdir so each carries THAT slice's key/ts/lsn stats — the stats
-        machinery is unchanged. Missing subdirs (empty slices: duplicate
-        quantile bounds, fewer distinct keys than slices) are skipped."""
         raw: dict[str, list[dict[str, Any]]] = {}
         for i in range(n_slices):
             sub = f"_sdir={i}"

@@ -229,7 +229,7 @@ class SourceSpec:
 
 
 #: the layout axes compact() accepts from a TableSpec, validated at load
-_LAYOUT_KEYS = ("ts_slices", "key_slices", "grid_slices")
+_LAYOUT_KEYS = ("ts_slices", "key_slices")
 
 
 @dataclass(frozen=True)
@@ -243,11 +243,12 @@ class TableSpec:
     the table every N epochs; ``compact_max_files`` additionally folds
     just the buckets whose file count exceeded the bound (the
     read-amplification guard when batch sizes vary). ``layout`` pins the
-    fold's clustering — one of ``{"ts_slices": k}``, ``{"key_slices": k}``
-    or ``{"grid_slices": [kk, tk]}`` (see ``LakeTable.compact``); omitted,
-    each fold PRESERVES whatever layout the table already has. Compaction
-    is idempotent under streaming re-delivery: a replayed epoch's fold
-    finds the buckets already folded at the layout and no-ops."""
+    fold's clustering on one or both axes — ``{"ts_slices": k}``,
+    ``{"key_slices": k}`` or both (the grid; see ``LakeTable.compact``);
+    an unnamed axis is 1. Omitted, each fold PRESERVES whatever layout
+    the table already has. Compaction is idempotent under streaming
+    re-delivery: a replayed epoch's fold finds the buckets already folded
+    at the layout and no-ops."""
 
     name: str
     key_cols: tuple[str, ...]
@@ -288,9 +289,9 @@ class TableSpec:
                 )
         if self.layout is not None:
             bad = set(self.layout) - set(_LAYOUT_KEYS)
-            if bad or len(self.layout) != 1:
+            if bad or not self.layout:
                 raise ValueError(
-                    f"table {self.name!r}: layout must be exactly one of "
+                    f"table {self.name!r}: layout must name one or both of "
                     f"{_LAYOUT_KEYS}, got {sorted(self.layout)}"
                 )
             if not (self.compact_every or self.compact_max_files):
@@ -956,8 +957,6 @@ class Pipeline:
             if t.name in self._layout_validated or not t.layout:
                 continue
             try:
-                # compact() canonicalizes the layout (grid_slices shape
-                # check included) — no caller-side normalization
                 self.tables[t.name].compact(buckets=[], **t.layout)
             except Exception as e:
                 raise ValueError(

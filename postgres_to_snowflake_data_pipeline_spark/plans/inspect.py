@@ -45,11 +45,3 @@ def read_schema_columns(df: DataFrame) -> list[list[str]]:
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df) or "BroadcastNestedLoopJoin" in explain_str(df)
 
-
-def has_partial_aggregate(df: DataFrame) -> bool:
-    """True when the plan contains a map-side partial aggregate (the skew
-    defense for LWW dedup: hot keys collapse before the shuffle)."""
-    text = explain_str(df)
-    return bool(re.search(r"HashAggregate.*\n(?:.*\n)*?.*Exchange", text)) and (
-        "partial_" in text or "Partial" in text
-    )

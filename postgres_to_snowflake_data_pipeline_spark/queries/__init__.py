@@ -59,7 +59,7 @@ CATALOG: dict[str, tuple[QueryFn, str | None]] = {
         cdcq.C08_SQL,
     ),
     # grid (2-axis) clustered layout end-to-end (round 4c): replay ->
-    # compact(grid_slices) -> BOTH read shapes (ts window + point lookups)
+    # compact(key_slices, ts_slices) -> BOTH read shapes (ts window + point lookups)
     # over one table, pruning asserted on inputFiles inside the query;
     # oracle = the LWW state windowed/filtered declaratively
     "c09_grid_mixed_reads": (cdcq.c09_grid_mixed_reads, cdcq.C09_SQL),

@@ -666,9 +666,9 @@ SELECT * FROM ({C01_SQL}) WHERE conv_id IN ({_C06_IN})
 
 
 def c09_grid_mixed_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The GRID layout proven end-to-end: replay, ``compact(grid_slices=
-    (4, 4))`` (key bands × event-time bands — every file manifest-tight on
-    BOTH axes), then the two read shapes the grid exists to balance, over
+    """The GRID layout proven end-to-end: replay, ``compact(key_slices=4,
+    ts_slices=4)`` (key bands × event-time bands — every file
+    manifest-tight on BOTH axes), then the two read shapes the grid exists to balance, over
     the SAME table: a late time window via ``ts_prune`` and point lookups
     at c06's keys via ``read_key``. Both reads must be FILE-PRUNED
     (asserted on ``inputFiles`` — a driver-green row certifies the
@@ -698,7 +698,7 @@ def c09_grid_mixed_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_buckets=8,
     )
     replay_feed(spark, table, feed_path, epochs=2)
-    table.compact(grid_slices=(4, 4))
+    table.compact(key_slices=4, ts_slices=4)
     every = set(table.read().inputFiles())
 
     us = F.unix_micros(F.col("ts").cast("timestamp"))

@@ -44,7 +44,6 @@ def run_stream(
     feed_path: str,
     event_schema: T.StructType,
     checkpoint_dir: str,
-    lineage_path: str | None = None,
     max_files_per_trigger: int = 1,
     compact_every: int = 16,
     compact_max_files: int | None = None,
@@ -76,12 +75,13 @@ def run_stream(
     read-amplification guard when batch sizes vary wildly (a cadence-only
     trigger lets per-bucket file counts grow unbounded between firings when
     many small batches arrive). ``compact_layout`` clusters the compacted
-    bases (lake/table.py::compact) — one of ``{"ts_slices": k}`` (manifest
-    zone maps keep skipping files for ``read(ts_prune=...)`` on the
-    long-running table) / ``{"key_slices": k}`` / ``{"grid_slices":
-    (kk, tk)}``. The default (None) PRESERVES whatever clustering the
-    table already has (a restarted stream that omits it must not un-slice
-    the layout its previous run built).
+    bases (lake/table.py::compact) on one or both axes —
+    ``{"ts_slices": k}`` (manifest zone maps keep skipping files for
+    ``read(ts_prune=...)`` on the long-running table), ``{"key_slices":
+    k}``, or both for the grid; an unnamed axis is 1. The default (None)
+    PRESERVES whatever clustering the table already has (a restarted
+    stream that omits it must not un-slice the layout its previous run
+    built).
 
     ``views``: IncrementalAggViews (lake/view.py) refreshed after every
     merge — idempotency is watermark-based, not commit-keyed: a replayed
@@ -129,7 +129,6 @@ def run_stream(
             table,
             batch_df,
             epoch=batch_id,
-            lineage_path=lineage_path,
             salt_buckets=salt_buckets,
         )
         if compact_every and (batch_id + 1) % compact_every == 0:

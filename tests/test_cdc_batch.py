@@ -10,7 +10,11 @@ from __future__ import annotations
 
 import pytest
 
-from postgres_to_snowflake_data_pipeline_spark.cdc.apply import apply_batch, replay_feed
+from postgres_to_snowflake_data_pipeline_spark.cdc.apply import (
+    apply_batch,
+    export_lineage,
+    replay_feed,
+)
 from postgres_to_snowflake_data_pipeline_spark.cdc.generator import change_events, write_feed
 from postgres_to_snowflake_data_pipeline_spark.cdc.oracle import assert_matches_oracle
 from postgres_to_snowflake_data_pipeline_spark.cdc.schemas import TRANSCRIPT_SCHEMA
@@ -63,10 +67,10 @@ def test_multi_epoch_replay_matches_oracle(spark, table, tmp_path):
     events = change_events(spark, N_EVENTS, n_convs=N_CONVS)
     write_feed(events, feed_path, n_files=10)
     lineage = str(tmp_path / "lineage")
-    results = replay_feed(spark, table, feed_path, epochs=5,
-                          lineage_path=lineage, compact_every=2)
+    results = replay_feed(spark, table, feed_path, epochs=5, compact_every=2)
     assert len(results) == 5 and not any(r.skipped for r in results)
     assert_matches_oracle(table.read(), events, PAYLOAD)
+    export_lineage(spark, table, lineage)  # once, after the drain
     # lineage reconciles: sum(rows_in) across epochs == feed row count
     ldf = spark.read.parquet(lineage)
     total_in = ldf.groupBy().sum("rows_in").first()[0]

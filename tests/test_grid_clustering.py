@@ -1,4 +1,4 @@
-"""Grid-clustered compaction: `compact(grid_slices=(kk, tk))` bands each
+"""Grid-clustered compaction: `compact(key_slices=kk, ts_slices=tk)` bands each
 bucket's resolved rows at key quantiles, then cuts each band at event-time
 quantiles — up to kk×tk base files whose manifest entries carry TIGHT
 ranges on BOTH axes (the slice grid a Z-order curve degenerates to at file
@@ -49,7 +49,7 @@ def test_grid_layout_has_tight_ranges_on_both_axes(spark, tmp_path):
     table = _mk_table(spark, tmp_path / "t")
     apply_batch(spark, table, spark.createDataFrame(_rows(400), SCHEMA), epoch=0)
     before = _state(table)
-    snap = table.compact(grid_slices=(4, 4))
+    snap = table.compact(key_slices=4, ts_slices=4)
     for _b, fs in snap.files.items():
         assert {e["key_k"] for e in fs} == {4}
         assert {e["ts_k"] for e in fs} == {4}
@@ -85,7 +85,7 @@ def test_grid_prunes_both_read_shapes(spark, tmp_path):
     table = _mk_table(spark, tmp_path / "t")
     apply_batch(spark, table, spark.createDataFrame(_rows(400), SCHEMA), epoch=0)
     plain_rows = _state(table)
-    snap = table.compact(grid_slices=(4, 4))
+    snap = table.compact(key_slices=4, ts_slices=4)
     per_bucket = max(len(fs) for fs in snap.files.values())
     assert per_bucket > 4  # the grid actually fanned out
 
@@ -117,7 +117,7 @@ def test_grid_prunes_both_read_shapes(spark, tmp_path):
 def test_default_compact_preserves_grid_layout(spark, tmp_path):
     table = _mk_table(spark, tmp_path / "t")
     apply_batch(spark, table, spark.createDataFrame(_rows(240), SCHEMA), epoch=0)
-    table.compact(grid_slices=(3, 2))
+    table.compact(key_slices=3, ts_slices=2)
     apply_batch(
         spark, table,
         spark.createDataFrame(_rows(120, lsn0=1000), SCHEMA), epoch=1,
@@ -145,6 +145,4 @@ def test_grid_needs_a_timestamp_column(spark, tmp_path):
     )
     apply_batch(spark, t, ev, epoch=0, salt_buckets=0)
     with pytest.raises(ValueError, match="no timestamp column"):
-        t.compact(grid_slices=(2, 2))
-    with pytest.raises(ValueError, match="alternative layout"):
-        t.compact(grid_slices=(2, 2), key_slices=2)
+        t.compact(key_slices=2, ts_slices=2)

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 
 from postgres_to_snowflake_data_pipeline_spark.cdc.apply import apply_batch
@@ -86,11 +85,14 @@ def test_delta_then_default_compact_refolds_at_key_layout(spark, tmp_path):
     assert len(table.read_key("c005").inputFiles()) == 1
 
 
-def test_layout_axes_are_exclusive_and_explicit_overrides(spark, tmp_path):
+def test_explicit_layout_overrides(spark, tmp_path):
     table = _mk_table(spark, tmp_path / "t")
     apply_batch(spark, table, spark.createDataFrame(_rows(120), SCHEMA), epoch=0)
-    with pytest.raises(ValueError, match="alternative layout"):
-        table.compact(ts_slices=2, key_slices=2)
+    # the two axes are independent: both named is the grid, stamped on
+    # every entry
+    snap = table.compact(ts_slices=2, key_slices=2)
+    for _b, fs in snap.files.items():
+        assert {(e["ts_k"], e["key_k"]) for e in fs} == {(2, 2)}
     table.compact(key_slices=4)
     # an explicit ts layout is a COMPLETE request: key axis collapses to 1
     snap = table.compact(ts_slices=2)

@@ -422,7 +422,7 @@ def test_declared_maintenance_folds_at_spec_layout(spark, tmp_path):
         "tables": [
             {"name": "ta", "key_cols": ["conv_id", "turn_idx"],
              "n_buckets": 4, "compact_every": 2,
-             "layout": {"grid_slices": [3, 2]}},
+             "layout": {"key_slices": 3, "ts_slices": 2}},
             {"name": "tb", "key_cols": ["conv_id", "turn_idx"],
              "n_buckets": 4},  # no policy: never folded by the runner
         ],
@@ -464,22 +464,23 @@ def test_declared_maintenance_folds_at_spec_layout(spark, tmp_path):
             "tables": [{"name": "tx", "key_cols": ["conv_id"],
                         "layout": {"key_slices": 4}}],
         })
-    with pytest.raises(ValueError, match="exactly one of"):
+    with pytest.raises(ValueError, match="one or both of"):
         PipelineSpec.from_dict({
             "lake_root": str(tmp_path / "lake3"),
             "sources": [{"name": "wal", "kind": "dataframe"}],
             "tables": [{"name": "tx", "key_cols": ["conv_id"],
                         "compact_every": 2,
-                        "layout": {"key_slices": 4, "ts_slices": 2}}],
+                        "layout": {"grid_slices": [2, 2]}}],
         })
 
 
 def test_bad_spec_layout_fails_before_the_first_commit(spark, tmp_path):
-    """A spec-declared layout that cannot apply to its table (malformed
-    grid shape here) must fail the FIRST run_epoch call upfront — not N
-    epochs in at the first cadence firing, after batches have already
-    committed (the late-failure mode streaming run_stream also guards
-    against with the same empty-bucket compact probe)."""
+    """A spec-declared layout that cannot apply to its table (time
+    clustering on a schema with no timestamp column here) must fail the
+    FIRST run_epoch call upfront — not N epochs in at the first cadence
+    firing, after batches have already committed (the late-failure mode
+    streaming run_stream also guards against with the same empty-bucket
+    compact probe)."""
     ev = _tagged(change_events(spark, 200, n_convs=20))
     spec = PipelineSpec.from_dict({
         "lake_root": str(tmp_path / "lake"),
@@ -487,11 +488,13 @@ def test_bad_spec_layout_fails_before_the_first_commit(spark, tmp_path):
         "tables": [
             {"name": "ta", "key_cols": ["conv_id", "turn_idx"],
              "n_buckets": 4, "compact_every": 4,
-             "layout": {"grid_slices": [4]}},  # malformed: needs 2 axes
+             "schema_ddl": "conv_id string, turn_idx int, role string, "
+                           "text string",
+             "layout": {"ts_slices": 4}},  # no timestamp to cluster by
         ],
     })
     pipe = Pipeline(spark, spec)
-    with pytest.raises(ValueError, match="spec-declared layout"):
+    with pytest.raises(ValueError, match="spec-declared layout.*no timestamp"):
         pipe.run_epoch(0, feeds={"wal": ev})
     # nothing committed: the failure preceded the first apply
     assert pipe.tables["ta"].current().commit_count == 0

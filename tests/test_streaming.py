@@ -11,6 +11,7 @@ import shutil
 
 import pytest
 
+from postgres_to_snowflake_data_pipeline_spark.cdc.apply import export_lineage
 from postgres_to_snowflake_data_pipeline_spark.cdc.generator import change_events, write_feed
 from postgres_to_snowflake_data_pipeline_spark.cdc.oracle import assert_matches_oracle
 from postgres_to_snowflake_data_pipeline_spark.cdc.schemas import (
@@ -37,9 +38,10 @@ def setup(spark, tmp_path):
 def test_stream_drain_matches_oracle(spark, setup):
     events, feed, table, ckpt, lineage = setup
     q = run_stream(spark, table, feed, CHANGE_EVENT_SCHEMA, ckpt,
-                   lineage_path=lineage, max_files_per_trigger=2)
+                   max_files_per_trigger=2)
     assert q.awaitTermination(300), "stream did not drain within deadline"
     assert_matches_oracle(table.read(), events, PAYLOAD)
+    export_lineage(spark, table, lineage)  # once, after the drain
     ldf = spark.read.parquet(lineage)
     assert ldf.groupBy().sum("rows_in").first()[0] == events.count()
 
@@ -179,7 +181,7 @@ def test_stream_compact_layout_grid(spark, setup):
     events, feed, table, ckpt, _ = setup
     q = run_stream(spark, table, feed, CHANGE_EVENT_SCHEMA, ckpt,
                    max_files_per_trigger=2, compact_every=2,
-                   compact_layout={"grid_slices": [3, 2]})
+                   compact_layout={"key_slices": 3, "ts_slices": 2})
     assert q.awaitTermination(300), "stream did not drain within deadline"
     assert_matches_oracle(table.read(), events, PAYLOAD)
     snap = table.current()

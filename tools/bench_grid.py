@@ -1,5 +1,5 @@
 """Measure the GRID layout's balanced pruning on a MIXED read workload
-(BENCH §6f) — the trade-off table for compact()'s third layout axis.
+(BENCH §6f) — the trade-off table for compact()'s two layout axes.
 
 One merged table, four layouts, TWO read shapes probed on each:
 
@@ -13,7 +13,7 @@ Layouts (k files per bucket each, so read amplification is comparable):
               windows scan EVERYTHING (slices span the full time range);
 - ts_sliced:  ``compact(ts_slices=k)`` — windows open ~1/k, lookups fan
               out to all k files;
-- grid:       ``compact(grid_slices=(s, s))`` with s=√k — BOTH reads open
+- grid:       ``compact(key_slices=s, ts_slices=s)`` with s=√k — BOTH reads open
               ~1/s of the bucket's bytes: neither axis optimal, neither
               pathological. Pick per table from the read mix.
 
@@ -133,7 +133,7 @@ def main() -> None:
         ("plain", dict(key_slices=1)),
         ("key_sliced", dict(key_slices=k_slices)),
         ("ts_sliced", dict(ts_slices=k_slices)),
-        ("grid", dict(grid_slices=(side, side))),
+        ("grid", dict(key_slices=side, ts_slices=side)),
     ]
     out: dict = {
         "metric": "grid_mixed_workload",

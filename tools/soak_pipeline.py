@@ -84,7 +84,7 @@ def main() -> None:
             # proves both policies survive kill/restart + re-delivery
             {"name": "ta", "key_cols": ["conv_id", "turn_idx"],
              "n_buckets": 16, "compact_every": 3,
-             "layout": {"grid_slices": [2, 2]}},
+             "layout": {"key_slices": 2, "ts_slices": 2}},
             {"name": "tb", "key_cols": ["conv_id", "turn_idx"],
              "n_buckets": 16, "compact_max_files": 4,
              "layout": {"key_slices": 4}},

@@ -32,6 +32,7 @@ from postgres_to_snowflake_data_pipeline_spark.cdc.generator import (  # noqa: E
 )
 from postgres_to_snowflake_data_pipeline_spark.cdc.apply import (  # noqa: E402
     apply_batch,
+    export_lineage,
     replay_feed,
 )
 from postgres_to_snowflake_data_pipeline_spark.cdc.schemas import (  # noqa: E402
@@ -63,8 +64,8 @@ def main() -> int:
             ("conv_id", "turn_idx"), n_buckets=8,
         )
         lineage_path = f"{work}/lineage"
-        replay_feed(spark, table, feed_path, epochs=8,
-                    lineage_path=lineage_path, compact_every=4)
+        replay_feed(spark, table, feed_path, epochs=8, compact_every=4)
+        export_lineage(spark, table, lineage_path)  # once, after the drain
         state = table.read().persist()
         from postgres_to_snowflake_data_pipeline_spark.cdc.oracle import (
             assert_matches_oracle,
@@ -103,8 +104,8 @@ def main() -> int:
 
         # 4. lineage totals
         lineage = spark.read.parquet(lineage_path)
-        # only replay_feed logged lineage; the evolved apply_batch had no
-        # lineage_path, so the reconciliation target is the original feed
+        # exported right after replay_feed, before the evolved apply_batch,
+        # so the reconciliation target is the original feed
         rows_in = lineage.agg(F.sum("rows_in")).first()[0]
         check("lineage sum(rows_in) == feed count",
               rows_in == events.count(), f"({rows_in} vs {events.count()})")
