@@ -146,6 +146,23 @@ def probe_hot_bucket_share(events: DataFrame, kcol0: str, n_buckets: int) -> flo
     return round(hist["mx"] / hist["tot"], 4) if hist["tot"] else 0.0
 
 
+def _probe_input(
+    raw: DataFrame, normalized: DataFrame, kcol0: str
+) -> tuple[DataFrame, str]:
+    """The frame and key column the auto-salt probe scans: the RAW batch
+    when it carries the key column (matched case-insensitively, as
+    ``normalize_to_schema`` matches it) with the normalized type — the
+    normalized frame runs the ``mapInArrow`` normalizer over every payload
+    column, since Catalyst cannot prune columns through it — else the
+    normalized frame, so the share is always that of the bucketed key."""
+    src = {n.lower(): n for n in raw.columns}.get(kcol0.lower())
+    if src is not None and (
+        raw.schema[src].dataType == normalized.schema[kcol0].dataType
+    ):
+        return raw, src
+    return normalized, kcol0
+
+
 def resolve_salt(hot_share: float, n_buckets: int) -> int:
     """The auto-salt verdict for an observed hot-bucket share: salt above
     max(SKEW_TRIGGER_SHARE, 3x the uniform per-bucket share) — the floor
@@ -350,6 +367,7 @@ def apply_batch(
     # verification counts (/root/reference/dags/s3_to_snowflake_dag.py:159-203).
     # The per-partition breakdown comes from the written files' parquet
     # footers inside LakeTable.merge (one lineage row per bucket).
+    raw = events
     table_schema, events, _obs_metrics = _normalize_batch(
         table, events, f"epoch-{epoch}"
     )
@@ -381,8 +399,9 @@ def apply_batch(
         if verdict is not None:
             salt_buckets = verdict
         else:
+            probe_df, probe_col = _probe_input(raw, events, snap0.key_cols[0])
             hot_share = probe_hot_bucket_share(
-                events, snap0.key_cols[0], snap0.n_buckets
+                probe_df, probe_col, snap0.n_buckets
             )
             salt_buckets = resolve_salt(hot_share, snap0.n_buckets)
     storage = lww_dedup(events, table_schema, snap0, salt_buckets)

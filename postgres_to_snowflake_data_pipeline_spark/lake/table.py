@@ -73,10 +73,15 @@ _PARQUET_TS_CONF = "spark.sql.parquet.outputTimestampType"
 _PARQUET_TS_PINNED = "TIMESTAMP_MICROS"
 
 
-class _pinned_parquet_writes:
-    """Context manager pinning ``spark.sql.parquet.outputTimestampType``
-    to TIMESTAMP_MICROS around a lake data-file write, restoring the
-    caller's value afterwards.
+class _pinned_conf:
+    """Context manager pinning one SQL conf ``key`` to ``value`` on
+    ``spark`` for the duration of a lake data-file write or scan build,
+    restoring the caller's value (or unsetting it) afterwards. Two pins
+    use it: ``spark.sql.parquet.outputTimestampType`` = TIMESTAMP_MICROS
+    around every data write (the stats contract above), and
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` =
+    ``LakeTable.STATS_DRIVER_THRESHOLD`` around ``_read_files``' scan
+    construction (see there).
 
     Why a bounded conf flip and not a ``spark.newSession()`` child (the
     isolated-SQLConf pattern the aggregate-pushdown READ path uses): the
@@ -86,40 +91,43 @@ class _pinned_parquet_writes:
     view bridge) executes it on the child's listener bus and ``obs.get``
     never completes. The flip is safe where it matters:
 
-    - engine-built sessions (session.py) already pin TIMESTAMP_MICROS, so
-      the manager is a NO-OP there — concurrent engine queries never see
-      a conf mutation;
+    - engine-built sessions (session.py) already pin both values, so the
+      manager is a NO-OP there — concurrent engine queries never see a
+      conf mutation;
     - on a foreign session, queries already in flight captured their
       SQLConf at query start (``SQLExecution.withSQLConfPropagated``) and
       are unaffected; a query *starting* inside the window at worst
-      writes its own parquet in the better-encoded format.
+      writes its own parquet in the better-encoded format, or lists its
+      own paths on the driver.
 
     ``_file_stats`` additionally RECOVERS ts stats from INT96 files
     written by third-party/legacy writers, so the zone-map contract holds
     even for data this manager never touched.
     """
 
-    def __init__(self, spark: SparkSession):
+    def __init__(self, spark: SparkSession, key: str, value: str):
         self.spark = spark
+        self.key = key
+        self.value = value
         self._old: str | None = None
         self._flip = False
 
-    def __enter__(self) -> "_pinned_parquet_writes":
+    def __enter__(self) -> "_pinned_conf":
         try:
-            cur = self.spark.conf.get(_PARQUET_TS_CONF, None)
+            cur = self.spark.conf.get(self.key, None)
         except Exception:  # pragma: no cover - RuntimeConfig always present
             cur = None
-        if cur != _PARQUET_TS_PINNED:
+        if cur != self.value:
             self._old, self._flip = cur, True
-            self.spark.conf.set(_PARQUET_TS_CONF, _PARQUET_TS_PINNED)
+            self.spark.conf.set(self.key, self.value)
         return self
 
     def __exit__(self, *exc: Any) -> None:
         if self._flip:
             if self._old is None:
-                self.spark.conf.unset(_PARQUET_TS_CONF)
+                self.spark.conf.unset(self.key)
             else:
-                self.spark.conf.set(_PARQUET_TS_CONF, self._old)
+                self.spark.conf.set(self.key, self._old)
 
 
 INTERNAL_FIELDS = [
@@ -354,6 +362,15 @@ class LakeTable:
         - WIDENED fields read old files through the parquet reader's native
           type promotion (int32→int64, float→double);
         - DROPPED columns simply aren't requested.
+
+        The scan is planned from the manifest's path list alone: Spark
+        builds the ``InMemoryFileIndex`` eagerly, and above
+        ``parallelPartitionDiscovery.threshold`` paths (Spark's default 32)
+        it stats them in a one-task-per-path Spark job — about half of a
+        full scan of a bucketed table with a dozen unfolded deltas. The
+        threshold is pinned to ``STATS_DRIVER_THRESHOLD`` (the class value;
+        engine sessions already carry it, so the pin is a no-op there) and
+        the index is built serially on the driver.
         """
         paths = [os.path.join(self.root, e["path"]) for e in entries]
         if not paths:
@@ -368,7 +385,12 @@ class LakeTable:
         internal = self._internal_fields_for(snap, [f.name for f in want])
         for fld in internal:
             read_fields.append(T.StructField(fld.name, fld.dataType, True))
-        df = self.spark.read.schema(T.StructType(read_fields)).parquet(*paths)
+        with _pinned_conf(
+            self.spark,
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(LakeTable.STATS_DRIVER_THRESHOLD),
+        ):
+            df = self.spark.read.schema(T.StructType(read_fields)).parquet(*paths)
         cols: list[F.Column] = []
         value_of: dict[str, F.Column] = {}
         for fld in want:
@@ -1089,15 +1111,15 @@ class LakeTable:
         plan a full sort-merge shuffle of the source scan)."""
         snap = self.current() if snapshot_id is None else self.log.load(snapshot_id)
         keys = keys.localCheckpoint()
-        buckets = sorted(
-            r["b"]
-            for r in keys.select(
-                bucket_expr(snap.key_cols[0], snap.n_buckets).alias("b")
-            )
-            .distinct()
+        # one aggregate answers both the bucket list and the key count
+        # (<= n_buckets rows to the driver)
+        per_bucket = (
+            keys.groupBy(bucket_expr(snap.key_cols[0], snap.n_buckets).alias("b"))
+            .count()
             .collect()
         )
-        if keys.count() <= self.BROADCAST_KEYS_MAX:
+        buckets = sorted(r["b"] for r in per_bucket)
+        if sum(r["count"] for r in per_bucket) <= self.BROADCAST_KEYS_MAX:
             keys = F.broadcast(keys)
         return self.read(
             snapshot_id=snapshot_id,
@@ -2096,7 +2118,10 @@ class LakeTable:
         above it a DISTRIBUTED footer read runs instead — only the path
         strings are parallelized and executor tasks read the footers — so
         at 4096-bucket object-store scale the commit path never serializes
-        on O(files) driver GETs. Footers also answer STRING min/max, which
+        on O(files) driver GETs. The same cutoff is pinned as Spark's own
+        listing threshold for reads (``_read_files``), so one number
+        decides driver-vs-distributed for both footer stats and scan
+        planning. Footers also answer STRING min/max, which
         parquet *aggregate pushdown* cannot (it covers numeric/date only —
         a min/max-aggregate read-back of the key column silently degrades
         to scanning the whole key column on every large commit; this path
@@ -2116,7 +2141,7 @@ class LakeTable:
         ``_lsn`` range — so time-windowed reads can skip non-covering
         files with LWW soundness (see ``read(ts_prune=...)``)."""
         out = os.path.join(self.root, commit_dir)
-        with _pinned_parquet_writes(self.spark):
+        with _pinned_conf(self.spark, _PARQUET_TS_CONF, _PARQUET_TS_PINNED):
             (
                 df.withColumn("_bdir", F.col("_bucket"))
                 .write.partitionBy("_bdir")
@@ -2220,9 +2245,11 @@ class LakeTable:
             )
         return files, bucket_stats
 
-    #: file-count cutoff between driver-side footer reads and the
-    #: distributed pushdown read-back (cf. Spark's
-    #: spark.sql.sources.parallelPartitionDiscovery.threshold)
+    #: file-count cutoff between driver-side and distributed work on
+    #: data files, for both decisions: commit-path footer stats
+    #: (``_file_stats``) and read-path file listing (session.py and
+    #: ``_read_files`` pin Spark's
+    #: spark.sql.sources.parallelPartitionDiscovery.threshold to it)
     STATS_DRIVER_THRESHOLD = 256
     #: much lower cutoff when content indexes are declared: those stats
     #: READ the indexed columns' data (decompress + tokenize + hash),
@@ -4548,7 +4575,7 @@ class LakeTable:
         subdirs (empty slices: duplicate quantile bounds, fewer distinct
         keys than slices) are skipped."""
         out = os.path.join(self.root, commit_dir)
-        with _pinned_parquet_writes(self.spark):
+        with _pinned_conf(self.spark, _PARQUET_TS_CONF, _PARQUET_TS_PINNED):
             (
                 df.withColumn("_sdir", slice_col)
                 .drop(*drop_cols)

@@ -11,6 +11,11 @@ Catalyst + Tungsten. Everything here is plain public Spark configuration:
   the N-core and 4N-core benchmark runs (the reference pins America/Bogota
   at extraction time, /root/reference/scripts/export_to_s3.py:17-18; we pin
   once at the session).
+- parallelPartitionDiscovery.threshold pinned to the lake's
+  driver-vs-distributed cutoff (``LakeTable.STATS_DRIVER_THRESHOLD``):
+  at Spark's default of 32, every scan of more than 32 explicit paths
+  (a bucketed table with unfolded deltas) launches a one-task-per-path
+  listing job while the DataFrame is built.
 - shuffle.partitions sized to the local core count rather than the 200
   default; on a real cluster this (and AQE) sizes reduce tasks so that
   100 TB / partitions fits executor memory.
@@ -21,6 +26,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from postgres_to_snowflake_data_pipeline_spark.lake.table import LakeTable
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
@@ -54,6 +61,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(LakeTable.STATS_DRIVER_THRESHOLD),
+        )
         .config("spark.sql.caseSensitive", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

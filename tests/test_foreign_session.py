@@ -10,7 +10,7 @@ expire_rows never took the metadata-only drop). These tests replay the
 failure shape — a child session with the hostile confs explicitly set —
 and pin the three-layer fix:
 
-1. ``_pinned_parquet_writes`` flips outputTimestampType around every lake
+1. ``_pinned_conf`` flips outputTimestampType around every lake
    data write (no-op on engine sessions) and restores the caller's value;
 2. ``_ts_footer_or_scan`` recovers ts stats from INT96/stats-less files a
    foreign writer produced anyway (both the driver and the distributed

@@ -108,3 +108,39 @@ def test_auto_salt_verdict_is_reused_between_probes(spark, tmp_path):
     assert s1["salt_buckets"] == AUTO_SALT_BUCKETS  # reused
     assert s1["hot_bucket_share"] is None  # no re-probe
     assert_matches_oracle(table.read(), events, PAYLOAD)
+
+
+def test_probe_reads_the_raw_batch(spark, tmp_path):
+    """The auto-salt probe scans the RAW batch's key column (no
+    mapInArrow normalizer over the payload) and measures the same share
+    as on the normalized frame — also when the key's name differs only in
+    case; a raw frame without the key column, or with a drifted key type,
+    falls back to the normalized one."""
+    from postgres_to_snowflake_data_pipeline_spark.cdc.apply import (
+        _normalize_batch,
+        _probe_input,
+        probe_hot_bucket_share,
+    )
+
+    events = hot_key_feed(spark, 4000).localCheckpoint()
+    for i, name in enumerate(("conv_id", "CONV_ID")):
+        raw = events.withColumnRenamed("conv_id", name)
+        table = _table(spark, tmp_path / f"t{i}")
+        _, norm, _ = _normalize_batch(table, raw, "probe")
+        assert _probe_input(raw, norm, "conv_id") == (raw, name)
+        share = probe_hot_bucket_share(raw, name, 8)
+        assert share == probe_hot_bucket_share(norm, "conv_id", 8)
+        assert share >= 0.4
+        apply_batch(spark, table, raw, epoch=0)
+        assert table.current().summary["hot_bucket_share"] == share
+
+    no_key = events.drop("conv_id")
+    assert _probe_input(no_key, norm, "conv_id") == (norm, "conv_id")
+    # a drifted key type hashes differently from the normalized key
+    long_key = spark.createDataFrame(
+        [(1, "insert", 7, 0, "user", "x", None, None)],
+        "lsn long, op string, conv_id long, turn_idx int, role string, "
+        "text string, tool string, ts timestamp",
+    )
+    _, norm_long, _ = _normalize_batch(table, long_key, "probe")
+    assert _probe_input(long_key, norm_long, "conv_id") == (norm_long, "conv_id")
