@@ -56,20 +56,6 @@ LINEAGE_SCHEMA = T.StructType(
     ]
 )
 
-#: per-(epoch, bucket) lineage detail (one row per written table partition)
-BUCKET_LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("epoch", T.LongType(), False),
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("rows_merged", T.LongType(), False),
-        T.StructField("lsn_min", T.LongType(), True),
-        T.StructField("lsn_max", T.LongType(), True),
-        T.StructField("n_files", T.IntegerType(), False),
-        T.StructField("snapshot_id", T.LongType(), True),
-    ]
-)
-
-
 @dataclass
 class ApplyResult:
     epoch: int
@@ -893,28 +879,6 @@ def lineage_df(spark: SparkSession, table: LakeTable) -> DataFrame:
     return df.withColumn(
         "committed_at", F.timestamp_seconds(F.col("committed_at_unix"))
     ).drop("committed_at_unix").select([f.name for f in LINEAGE_SCHEMA.fields])
-
-
-def bucket_lineage_df(spark: SparkSession, table: LakeTable) -> DataFrame:
-    """Per-(epoch, bucket) lineage detail: rows merged, LSN range, and file
-    count for every table partition touched by every merge commit."""
-    rows = []
-    for snap in table.snapshots():
-        if "epoch" not in snap.summary:
-            continue
-        for b in snap.summary.get("bucket_lineage", []):
-            rows.append(
-                (
-                    int(snap.summary["epoch"]),
-                    int(b["bucket"]),
-                    int(b["rows_merged"]),
-                    b.get("lsn_min"),
-                    b.get("lsn_max"),
-                    int(b["n_files"]),
-                    int(snap.snapshot_id),
-                )
-            )
-    return spark.createDataFrame(rows, schema=BUCKET_LINEAGE_SCHEMA)
 
 
 def export_lineage(spark: SparkSession, table: LakeTable, path: str) -> None:

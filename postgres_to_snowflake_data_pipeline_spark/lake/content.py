@@ -6,7 +6,8 @@ columns; ``index.tokens`` — one text column), every data file's manifest
 entry records what values/tokens the file contains, and
 ``LakeTable.read(eq_prune=..., token_prune=...)`` opens only the files the
 index cannot rule out — with the SAME LWW floor-retention rule that keeps
-time-window reads sound under merge-on-read (see ``LakeTable.read``).
+time-window reads sound under merge-on-read (see
+``lake/table.py::_plan_scan``).
 
 Index shapes, per file:
 

@@ -43,6 +43,7 @@ import os
 import shutil
 import time
 import uuid
+from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Any
 
@@ -252,6 +253,182 @@ def resolve_lww(
     return g.select(*out)
 
 
+def _ts_usable(e: dict[str, Any], zid: int | None) -> bool:
+    """Do entry ``e``'s ts zone stats describe the zone column with field
+    id ``zid``? Only stats recorded under the SAME column identity
+    (``ts_id``) count: after a drop makes a different timestamp column the
+    zone column, old entries' stats describe the dropped column; a rename
+    keeps the id, so its stats stay live."""
+    return e.get("ts_min") is not None and zid is not None and e.get("ts_id") == zid
+
+
+def _candidate(e: dict[str, Any], fid: int | None, value: Any, kind: str) -> bool:
+    """May entry ``e`` hold a row matching one payload predicate? False
+    only when the entry's statistic for field ``fid`` rules it out —
+    missing, over-cap (``None`` set) or other-identity stats prove
+    nothing, so their entries are candidates."""
+    if kind == "ts":
+        lo, hi = value
+        return not _ts_usable(e, fid) or (e["ts_min"] <= hi and e["ts_max"] >= lo)
+    if fid is None:
+        return True
+    if kind == "eq":
+        vals = (e.get("sets") or {}).get(str(fid))
+        return vals is None or value in vals
+    tok = e.get("tok")
+    return tok is None or tok.get("id") != fid or content_index.token_maybe(tok, value)
+
+
+def _lww_retain(
+    entries: list[dict[str, Any]],
+    covering: list[dict[str, Any]],
+) -> list[dict[str, Any]]:
+    """The LWW floor every payload-statistic rule of ``_plan_scan`` ends
+    with: given the CANDIDATE subset (``covering``) of one bucket's
+    entries, keep the candidates plus every entry whose ``lsn_max >=
+    min(lsn_min over candidates)``; a candidate without lsn stats keeps
+    the whole bucket. ``_plan_scan``'s docstring says why this keeps every
+    winner."""
+    if not covering:
+        return []
+    floors = [e["lsn_min"] for e in covering if e.get("lsn_min") is not None]
+    if len(floors) < len(covering):
+        return list(entries)  # a covering file without lsn stats: keep all
+    floor = min(floors)
+    cover_ids = {id(e) for e in covering}
+    cover_groups = {e.get("lww_group") for e in covering}
+    # When every covering entry came from ONE compaction pass, a
+    # same-pass sibling outside the candidate set can be pruned
+    # regardless of lsn: within a pass each key appears in exactly one
+    # file (LWW fully resolved at compaction), so the sibling holds
+    # neither a better version of a covering key nor any matching row
+    # (non-covering entries all have usable stats — statless ones
+    # count as covering). Entries from other passes or later deltas
+    # still pass through the lsn-floor rule; a late lower-lsn delta
+    # that matches the predicate is itself covering with a different
+    # group, which disables the shortcut and retains the out-of-
+    # predicate winners that must beat it.
+    g = (
+        next(iter(cover_groups))
+        if len(cover_groups) == 1 and None not in cover_groups
+        else None
+    )
+    return [
+        e
+        for e in entries
+        if id(e) in cover_ids
+        or (
+            (g is None or e.get("lww_group") != g)
+            and (e.get("lsn_max") is None or e["lsn_max"] >= floor)
+        )
+    ]
+
+
+@dataclass(frozen=True)
+class ScanPlan:
+    """The files one read opens, planned by ``_plan_scan``: ``folded``
+    entries are read as-is, ``delta`` entries are LWW-resolved, and
+    ``pruned`` counts the entries each rule (``bucket``, ``key``, ``ts``,
+    ``content``) dropped."""
+
+    folded: list[dict[str, Any]]
+    delta: list[dict[str, Any]]
+    pruned: dict[str, int]
+
+
+def _plan_scan(
+    files: dict[str, list[dict[str, Any]]],
+    buckets: list[int] | None,
+    key_values: list[Any] | None,
+    preds: list[tuple[str, int | None, Any, str]],
+) -> ScanPlan:
+    """Plan a read from manifest statistics alone — no Spark, no schema.
+    Every pruning rule of a read lives here.
+
+    ``files``: bucket -> manifest entries (``Snapshot.files``).
+    ``buckets``: the selected buckets, or None for all. ``key_values``:
+    the bucketing-key values the caller filters to, or None. ``preds``:
+    validated payload predicates ``(column, field id, value, kind)`` with
+    kind ``ts`` (value ``(lo_us, hi_us)``, inclusive epoch micros), ``eq``
+    or ``tok``; the caller applies each one as a residual filter AFTER
+    LWW resolution, and the plan guarantees those filters see every
+    key's true winner.
+
+    Per bucket, in this order:
+
+    - bucket: unselected buckets are dropped whole (buckets partition the
+      key space);
+    - key range: an entry whose ``[key_min, key_max]`` can hold none of
+      ``key_values`` is dropped, statless entries stay — a dropped file
+      holds no row of a wanted key, so their resolution sets are unchanged;
+    - ts, then content (the conjunction of the eq/tok predicates): a
+      candidate test (``_candidate``) followed by the floor
+      ``_lww_retain``. Entries without usable stats (pre-stats commits,
+      over-cap value sets, stats of another field id) are candidates.
+
+    Why the floor is needed and sound: pruning on a PAYLOAD statistic under
+    merge-on-read cannot just open the candidates — a key could resolve
+    to a stale matching version while its true winner (newer and not
+    matching, or a tombstone) sits in a skipped file. The floor keeps
+    every candidate plus every entry whose ``lsn_max >= min(lsn_min over
+    candidates)``. Any key with a version in a candidate file has its
+    winner at an lsn >= that version's lsn >= the floor, so the winner's
+    file is retained; skipped files contribute only keys whose every
+    version fails the predicate — their winner fails the residual too —
+    or strictly older loser versions, which cannot change the resolution.
+    The two floors compose in sequence: a wrong answer would need a
+    retained stale version passing every residual, whose file is then a
+    candidate under every rule, and each floor in turn retains the true
+    winner's file. (One floor over the conjunction of ts and content would
+    also be sound, but opens different files.)
+
+    Split: a bucket whose surviving entries include an unfolded delta goes
+    to ``delta``, any other to ``folded``. A fully folded bucket holds
+    exactly one storage row per key (compaction's max-struct fold;
+    slices and rewrites are key-disjoint), so shipping its rows through
+    the resolve shuffle would be a semantic no-op costing a full exchange
+    of the payload; buckets partition the key space, so resolving the
+    delta buckets alone and unioning is exact. The split leans on BUCKET
+    HONESTY (every key's rows live in its hash bucket — the invariant
+    merge enforces and fsck(deep) checks): rows misfiled into a foreign
+    bucket can read as duplicate keys until compact() re-homes them
+    (tests/test_fsck.py pins that surface-then-repair behavior)."""
+    folded: list[dict[str, Any]] = []
+    delta: list[dict[str, Any]] = []
+    pruned = dict.fromkeys(("bucket", "key", "ts", "content"), 0)
+    floored = [
+        ("ts", [p for p in preds if p[3] == "ts"]),
+        ("content", [p for p in preds if p[3] != "ts"]),
+    ]
+    for b, fs in files.items():
+        if buckets is not None and int(b) not in buckets:
+            pruned["bucket"] += len(fs)
+            continue
+        kept = [
+            e
+            for e in fs
+            if key_values is None
+            or e.get("key_min") is None
+            or any(e["key_min"] <= v <= e["key_max"] for v in key_values)
+        ]
+        pruned["key"] += len(fs) - len(kept)
+        for rule, rule_preds in floored:
+            if rule_preds:
+                covering = [
+                    e
+                    for e in kept
+                    if all(_candidate(e, fid, v, k) for _c, fid, v, k in rule_preds)
+                ]
+                retained = _lww_retain(kept, covering)
+                pruned[rule] += len(kept) - len(retained)
+                kept = retained
+        if any(e.get("kind") == "delta" for e in kept):
+            delta.extend(kept)
+        else:
+            folded.extend(kept)
+    return ScanPlan(folded, delta, pruned)
+
+
 class LakeTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -451,40 +628,18 @@ class LakeTable:
         moving a 100 TB text column for a count-style consumer.
 
         ``ts_prune=(lo, hi)`` (inclusive UTC datetimes) returns the current
-        rows whose event-time column lies in the window, opening only the
-        files the secondary zone map cannot rule out. Pruning on a PAYLOAD
-        column under merge-on-read needs more care than key pruning: a
-        naive "open only ts-covering files" read could resolve a key to a
-        stale in-window version while the true winner (newer, out-of-window
-        or a tombstone) sits in a skipped file. The sound rule used here,
-        per bucket: keep every ts-covering file, plus every file whose
-        ``lsn_max >= min(lsn_min over covering files)``. Any key with a
-        version in a covering file has its winner at an lsn >= that
-        version's lsn >= the covering floor, so the winner's file is always
-        retained; skipped files contribute only (a) keys whose every
-        version is out-of-window — their winner is out-of-window too, and
-        the residual filter excludes them — or (b) strictly-older loser
-        versions, which cannot change LWW resolution. The residual
-        ``ts BETWEEN`` filter runs AFTER resolution. Entries without zone
-        stats (pre-stats commits) are treated as covering.
-
-        ``eq_prune={col: value}`` / ``token_prune="token"`` (content
-        indexes, lake/content.py) return the current rows matching
-        ``col = value`` for every pair / whose declared token column
-        contains the lowercase-alphanumeric token, opening only the files
-        whose per-file value set / token index cannot rule the predicate
-        out. Soundness is the SAME floor-retention rule as ``ts_prune``
-        (``_lww_retain``) applied after it — the rules compose because a
-        wrong answer would need a retained stale version passing every
-        residual filter, whose file is then a candidate under every rule,
-        and each floor in turn retains the true winner's file. Files
-        without an index (pre-declaration commits, over-cap vocabularies,
-        Bloom false positives) are candidates — extra opens, never wrong
-        rows."""
+        rows whose event-time column lies in the window; ``eq_prune={col:
+        value}`` / ``token_prune="token"`` (content indexes,
+        lake/content.py) return the current rows matching ``col = value``
+        for every pair / whose declared token column contains the
+        lowercase-alphanumeric token. Each opens only the files the zone
+        map / value set / token index cannot rule out, then filters AFTER
+        resolution. Which files every rule (``buckets``, ``key_prune``
+        and these three) skips, and why the skips keep LWW sound, is
+        ``_plan_scan``'s docstring."""
         snap = self.current() if snapshot_id is None else self.log.load(snapshot_id)
-        if self._patch_spec(snap) is not None and (
-            ts_prune is not None or eq_prune or token_prune is not None
-        ):
+        payload_prune = ts_prune is not None or eq_prune or token_prune is not None
+        if self._patch_spec(snap) is not None and payload_prune:
             # the lsn-floor retention rule is sound for WHOLE-ROW LWW only
             # (skipped files hold provably-losing versions). On a partial-
             # update table an old file can hold the CURRENT value of a
@@ -498,13 +653,21 @@ class LakeTable:
                 "resolution needs every storage row of a key, not just "
                 "the lsn-floor-retained set"
             )
-        want_fields = list(snap.schema.fields)
-        ts_col = self._zone_ts_col(snap.schema) if ts_prune is not None else None
-        if ts_prune is not None and ts_col is None:
-            raise ValueError("ts_prune: schema has no timestamp column")
-        if (
-            ts_prune is not None or eq_prune or token_prune is not None
-        ) and include_tombstones:
+        # payload predicates in manifest form: (column, field id for stats
+        # identity, value, kind). The planner prunes with them and each
+        # becomes one residual filter, in this order.
+        preds: list[tuple[str, int | None, Any, str]] = []
+        if ts_prune is not None:
+            ts_col = self._zone_ts_col(snap.schema)
+            if ts_col is None:
+                raise ValueError("ts_prune: schema has no timestamp column")
+            # epoch MICROS, not datetime literals: naive bounds are UTC by
+            # the ts_prune contract, and a datetime literal would be
+            # re-interpreted under the SESSION time zone — diverging from
+            # the manifest zone maps (instants) on any non-UTC session
+            window = (self._ts_micros(ts_prune[0]), self._ts_micros(ts_prune[1]))
+            preds.append((ts_col, snap.column_ids.get(ts_col), window, "ts"))
+        if payload_prune and include_tombstones:
             # tombstones carry NULL payload columns: they are invisible to
             # the residual filters and their membership in "the predicate"
             # is undefined — reject loudly rather than silently drop them
@@ -512,12 +675,10 @@ class LakeTable:
                 "ts_prune/eq_prune/token_prune cannot be combined with "
                 "include_tombstones: tombstones have no payload values"
             )
-        # content predicates: (column, field id for stats identity, value,
-        # kind). eq columns need only exist in the schema (files without an
-        # index stay candidates); the token column must be the DECLARED one
-        # — the index rode the writes, any other column has no stats.
-        schema_by_name = {f.name: f for f in want_fields}
-        content_preds: list[tuple[str, int | None, Any, str]] = []
+        # eq columns need only exist in the schema (files without an index
+        # stay candidates); the token column must be the DECLARED one — the
+        # index rode the writes, any other column has no stats.
+        schema_by_name = {f.name: f for f in snap.schema.fields}
         for c, v in (eq_prune or {}).items():
             f = schema_by_name.get(c)
             if f is None:
@@ -546,7 +707,7 @@ class LakeTable:
                     f"{f.dataType.simpleString()} but the value is "
                     f"{type(v).__name__} — pass the column's native type"
                 )
-            content_preds.append((c, snap.column_ids.get(c), v, "eq"))
+            preds.append((c, snap.column_ids.get(c), v, "eq"))
         if token_prune is not None:
             _, tok = self._content_spec(snap)
             if tok is None:
@@ -559,84 +720,44 @@ class LakeTable:
                     "token_prune: pass ONE lowercase alphanumeric token "
                     f"(got {token_prune!r})"
                 )
-            content_preds.append((tok[0], tok[1], token_prune, "tok"))
+            preds.append((tok[0], tok[1], token_prune, "tok"))
         if columns is not None:
-            missing = set(columns) - {f.name for f in want_fields}
+            missing = set(columns) - set(schema_by_name)
             if missing:
                 raise ValueError(f"unknown columns: {sorted(missing)}")
-            keep = set(columns) | set(snap.key_cols)
-            # predicate columns must be READ (residual filters) even when
-            # unrequested, but must not leak into the caller's schema
-            if ts_col is not None:
-                keep.add(ts_col)
-            keep.update(c for c, _i, _v, _k in content_preds)
-            want_fields = [f for f in want_fields if f.name in keep]
+        if semi_keys is not None and not set(semi_keys.columns) <= set(
+            snap.key_cols
+        ):
+            raise ValueError(
+                f"semi_keys columns {list(semi_keys.columns)} must be a "
+                f"subset of the key columns {snap.key_cols} (pre-LWW "
+                "filtering is only sound on key-column subsets)"
+            )
         requested = (
             None if columns is None else set(columns) | set(snap.key_cols)
         )
+        # predicate columns must be READ (residual filters) even when
+        # unrequested, but must not leak into the caller's schema
         aux_drop = (
-            set()
-            if requested is None
-            else ({ts_col} if ts_col is not None else set())
-            | {c for c, _i, _v, _k in content_preds}
-        ) - (requested or set())
+            set() if requested is None else {p[0] for p in preds} - requested
+        )
+        want_fields = [
+            f
+            for f in snap.schema.fields
+            if requested is None or f.name in requested | aux_drop
+        ]
         # key_prune accepts one value or several (e.g. the ANN lake
         # index's probed cells): a file survives if ANY value can lie in
         # its [key_min, key_max]
-        prune_vals = (
+        key_values = (
             list(key_prune)
             if isinstance(key_prune, (list, tuple, set, frozenset))
             else None if key_prune is None else [key_prune]
         )
-        # per-BUCKET resolve split: LWW resolution is only needed where a
-        # bucket's surviving entries include an unfolded delta — a fully
-        # folded bucket holds exactly one storage row per key (compaction's
-        # max-struct fold; slices/rewrites are key-disjoint), so shipping
-        # its rows through the resolve shuffle is a semantic no-op that
-        # costs a full exchange of the payload. Buckets partition the key
-        # space, so resolving each subset independently and unioning is
-        # exact — and on a mostly-folded table (the steady state under a
-        # maintenance cadence) a read right after one small merge shuffles
-        # only the touched buckets' rows instead of the whole table.
-        # The split leans on BUCKET HONESTY (every key's rows live in its
-        # hash bucket — the invariant merge enforces and fsck(deep)
-        # checks): rows misfiled into a foreign bucket (corruption, e.g.
-        # a caller-supplied wrong `_bucket`) can read as duplicate keys
-        # until compact() re-homes them, where the old global resolve
-        # silently collapsed them (tests/test_fsck.py pins the
-        # surface-then-repair behavior).
-        folded_entries: list[dict[str, Any]] = []
-        delta_entries: list[dict[str, Any]] = []
-        for b, fs in snap.files.items():
-            if buckets is not None and int(b) not in buckets:
-                continue
-            kept = []
-            for e in fs:
-                # manifest key-range stats (file skipping): a point lookup
-                # opens only files whose [key_min, key_max] can contain the
-                # key; entries without stats (pre-stats commits) always
-                # qualify. Sound for LWW: a skipped file provably holds no
-                # row of this key, so the resolution set is unchanged.
-                if prune_vals is not None and e.get("key_min") is not None:
-                    if not any(
-                        e["key_min"] <= v <= e["key_max"] for v in prune_vals
-                    ):
-                        continue
-                kept.append(e)
-            if ts_prune is not None:
-                kept = self._ts_prune_entries(
-                    kept, ts_prune, snap.column_ids.get(ts_col)
-                )
-            if content_preds:
-                kept = self._content_prune_entries(kept, content_preds)
-            if any(e.get("kind") == "delta" for e in kept):
-                delta_entries.extend(kept)
-            else:
-                folded_entries.extend(kept)
-        df_f = self._read_files(snap, folded_entries, fields=want_fields)
-        df_d = self._read_files(snap, delta_entries, fields=want_fields)
-        df = df_f if df_d is None else df_d
-        if df is None:
+        plan = _plan_scan(snap.files, buckets, key_values, preds)
+        df_f = self._read_files(snap, plan.folded, fields=want_fields)
+        df_d = self._read_files(snap, plan.delta, fields=want_fields)
+        if df_f is None and df_d is None:
             out_fields = [f for f in want_fields if f.name not in aux_drop]
             fields = out_fields + (
                 self._internal_fields_for(snap, [f.name for f in out_fields])
@@ -650,12 +771,6 @@ class LakeTable:
             # whole bucket. Sound only when joining on a subset of the key
             # columns (every retained key keeps ALL its row versions).
             on = list(semi_keys.columns)
-            if not set(on) <= set(snap.key_cols):
-                raise ValueError(
-                    f"semi_keys columns {on} must be a subset of the key "
-                    f"columns {snap.key_cols} (pre-LWW filtering is only "
-                    "sound on key-column subsets)"
-                )
             if df_f is not None:
                 df_f = df_f.join(semi_keys, on=on, how="left_semi")
             if df_d is not None:
@@ -667,38 +782,24 @@ class LakeTable:
             if df_d is None
             else df_d if df_f is None else df_f.unionByName(df_d)
         )
-        if ts_prune is not None:
-            # residual window filter — post-LWW, so a key whose CURRENT
-            # version left the window is excluded even when a stale
-            # in-window version was read. Compared as epoch MICROS, not
-            # datetime literals: naive bounds are UTC by the ts_prune
-            # contract, and a datetime literal would be re-interpreted
-            # under the SESSION time zone — diverging from the manifest
-            # zone maps (instants) on any non-UTC foreign session
-            lo_us, hi_us = self._ts_micros(ts_prune[0]), self._ts_micros(
-                ts_prune[1]
-            )
-            df = df.filter(
-                F.unix_micros(F.col(ts_col).cast("timestamp")).between(
-                    F.lit(lo_us), F.lit(hi_us)
+        for c, _fid, v, kind in preds:
+            # residual filters — post-LWW, so a key whose CURRENT version
+            # fails the predicate is excluded even when a stale matching
+            # version was read; the token split pattern is the complement
+            # of the index tokenizer (lake/content.py), so membership of a
+            # non-empty token agrees
+            if kind == "ts":
+                cond = F.unix_micros(F.col(c).cast("timestamp")).between(
+                    F.lit(v[0]), F.lit(v[1])
                 )
-            )
-        for c, _i, v, kind in content_preds:
-            # residual content filters — post-LWW for the same reason; the
-            # token split pattern is the complement of the index tokenizer
-            # (lake/content.py), so membership of a non-empty token agrees
-            if kind == "eq":
-                df = df.filter(F.col(c) == F.lit(v))
+            elif kind == "eq":
+                cond = F.col(c) == F.lit(v)
             else:
-                df = df.filter(
-                    F.array_contains(
-                        F.split(
-                            F.lower(F.col(c)),
-                            content_index.TOKEN_SPLIT_SQL,
-                        ),
-                        v,
-                    )
+                cond = F.array_contains(
+                    F.split(F.lower(F.col(c)), content_index.TOKEN_SPLIT_SQL),
+                    v,
                 )
+            df = df.filter(cond)
         if not include_tombstones:
             df = df.filter(~F.col("_deleted"))
         if not include_internal:
@@ -708,122 +809,6 @@ class LakeTable:
         elif aux_drop:
             df = df.drop(*aux_drop)
         return df
-
-    @staticmethod
-    def _ts_prune_entries(
-        entries: list[dict[str, Any]],
-        window: tuple[datetime, datetime],
-        ts_col_id: int | None,
-    ) -> list[dict[str, Any]]:
-        """LWW-sound zone-map pruning of one bucket's manifest entries for
-        a time window (see ``read`` docstring for the soundness argument).
-        An entry's ts stats are usable only when they were recorded from
-        the SAME column identity (``ts_id`` == the current zone column's
-        field id) — after a drop makes a different timestamp column the
-        zone column, old entries' stats describe the dropped column and
-        must not prune (renames keep the id, so their stats stay live).
-        Entries without usable ts stats count as covering; entries
-        lacking lsn stats are never skipped."""
-
-        def us(dt: datetime) -> int:
-            if dt.tzinfo is None:
-                dt = dt.replace(tzinfo=timezone.utc)
-            return int(dt.timestamp() * 1_000_000)
-
-        lo, hi = us(window[0]), us(window[1])
-        covering = [
-            e
-            for e in entries
-            if e.get("ts_min") is None
-            or ts_col_id is None
-            or e.get("ts_id") != ts_col_id
-            or (e["ts_min"] <= hi and e["ts_max"] >= lo)
-        ]
-        return LakeTable._lww_retain(entries, covering)
-
-    @staticmethod
-    def _content_prune_entries(
-        entries: list[dict[str, Any]],
-        preds: list[tuple[str, int | None, Any, str]],
-    ) -> list[dict[str, Any]]:
-        """LWW-sound content-index pruning of one bucket's manifest
-        entries: a file is a CANDIDATE unless some predicate's index
-        proves it holds no matching row (missing/over-cap/stale-identity
-        indexes prove nothing), then the shared floor-retention rule
-        keeps every potential winner (``_lww_retain``). Index identity is
-        by field id, like the ts zone map — stats recorded for a since-
-        renamed column stay live, stats for a dropped-and-readded name do
-        not prune."""
-
-        def maybe(e: dict[str, Any], cid: int | None, v: Any, kind: str) -> bool:
-            if cid is None:
-                return True
-            if kind == "eq":
-                vals = (e.get("sets") or {}).get(str(cid))
-                return vals is None or v in vals
-            tok = e.get("tok")
-            if tok is None or tok.get("id") != cid:
-                return True
-            return content_index.token_maybe(tok, v)
-
-        covering = [
-            e
-            for e in entries
-            if all(maybe(e, cid, v, kind) for _c, cid, v, kind in preds)
-        ]
-        return LakeTable._lww_retain(entries, covering)
-
-    @staticmethod
-    def _lww_retain(
-        entries: list[dict[str, Any]],
-        covering: list[dict[str, Any]],
-    ) -> list[dict[str, Any]]:
-        """The LWW floor-retention rule shared by every payload-statistic
-        prune (ts zone map, content indexes): given the CANDIDATE subset
-        — files the statistic cannot rule out, where a statless entry must
-        already count as a candidate — keep the candidates plus every
-        entry whose ``lsn_max >= min(lsn_min over candidates)``. Any key
-        with a version in a candidate file has its winner at an lsn >=
-        that version's lsn >= the floor, so the winner's file is always
-        retained; the caller's residual filter (post-LWW) excludes keys
-        whose winner fails the predicate. Sequential application of two
-        such rules stays sound: a wrong answer would need a retained stale
-        version passing every residual, whose file is then a candidate
-        under every rule, and each floor in turn retains the true
-        winner's file."""
-        if not covering:
-            return []
-        floors = [e["lsn_min"] for e in covering if e.get("lsn_min") is not None]
-        if len(floors) < len(covering):
-            return list(entries)  # a covering file without lsn stats: keep all
-        floor = min(floors)
-        cover_ids = {id(e) for e in covering}
-        cover_groups = {e.get("lww_group") for e in covering}
-        # When every covering entry came from ONE compaction pass, a
-        # same-pass sibling outside the candidate set can be pruned
-        # regardless of lsn: within a pass each key appears in exactly one
-        # file (LWW fully resolved at compaction), so the sibling holds
-        # neither a better version of a covering key nor any matching row
-        # (non-covering entries all have usable stats — statless ones
-        # count as covering). Entries from other passes or later deltas
-        # still pass through the lsn-floor rule; a late lower-lsn delta
-        # that matches the predicate is itself covering with a different
-        # group, which disables the shortcut and retains the out-of-
-        # predicate winners that must beat it.
-        g = (
-            next(iter(cover_groups))
-            if len(cover_groups) == 1 and None not in cover_groups
-            else None
-        )
-        return [
-            e
-            for e in entries
-            if id(e) in cover_ids
-            or (
-                (g is None or e.get("lww_group") != g)
-                and (e.get("lsn_max") is None or e["lsn_max"] >= floor)
-            )
-        ]
 
     @staticmethod
     def _validate_index_props(
@@ -3873,16 +3858,9 @@ class LakeTable:
         zid = snap.column_ids.get(zcol)
         cutoff_us = self._ts_micros(before)
 
-        def usable(e: dict[str, Any]) -> bool:
-            return (
-                e.get("ts_min") is not None
-                and zid is not None
-                and e.get("ts_id") == zid
-            )
-
         def dead(e: dict[str, Any]) -> bool:
             return (
-                usable(e)
+                _ts_usable(e, zid)
                 and e["ts_max"] < cutoff_us
                 and e.get("ts_nulls") == 0
             )
@@ -3893,7 +3871,7 @@ class LakeTable:
             # file with NO ts min/max is clean iff it is provably all
             # null-ts (ts_nulls == rows under the current column
             # identity); otherwise it must take the rewrite path.
-            if usable(e):
+            if _ts_usable(e, zid):
                 return e["ts_min"] >= cutoff_us
             return (
                 zid is not None
@@ -4255,9 +4233,10 @@ class LakeTable:
         compaction (a single base file per bucket spans the table's whole
         time range and can never be skipped). All slices of one pass share
         an ``lww_group`` token recording that each key appears in at most
-        ONE of them — ``_ts_prune_entries`` uses that to skip same-pass
-        siblings outside the window without the lsn-floor re-add — plus a
-        ``ts_k`` field recording the pass's slicing policy. The trade-off
+        ONE of them — read pruning (``_plan_scan``'s ``_lww_retain``) uses
+        that to skip same-pass siblings outside the window without the
+        lsn-floor re-add — plus a ``ts_k`` field recording the pass's
+        slicing policy. The trade-off
         is point-lookup fan-out: a key's bucket now holds up to
         ``ts_slices`` files whose key ranges all span the bucket (time
         slicing is orthogonal to key order), so ``read_key`` opens up to

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from postgres_to_snowflake_data_pipeline_spark.cdc.apply import apply_batch
@@ -158,3 +159,30 @@ def test_multi_file_bucket_commit_carries_per_file_stats(spark, tmp_path):
             # per-file, not bucket-union: the fanned files carry distinct
             # stats (deterministic data + hash -> stable across runs)
             assert len(ranges) == len(fs), fs
+
+
+def test_read_validates_columns_and_semi_keys_before_planning(spark, tmp_path):
+    """Bad ``columns`` / ``semi_keys`` arguments raise whatever the
+    manifest holds: on an empty table and on a bucket selection with no
+    files the read plans nothing, and must still reject them."""
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA,
+        ("conv_id", "turn_idx"), n_buckets=2,
+    )
+    payload_keys = spark.createDataFrame(
+        [("c1", "user")], "conv_id string, role string"
+    )
+
+    def bad_reads():
+        with pytest.raises(ValueError, match="subset of the key columns"):
+            table.read(semi_keys=payload_keys)
+        with pytest.raises(ValueError, match="unknown columns"):
+            table.read(columns=["nope"])
+
+    bad_reads()  # empty table
+    rows = [(0, "insert", "c1", 0, "user", "t", None, TS)]
+    apply_batch(spark, table, spark.createDataFrame(rows, SCHEMA), epoch=0)
+    bad_reads()
+    filled = [int(b) for b, fs in table.current().files.items() if fs]
+    with pytest.raises(ValueError, match="subset of the key columns"):
+        table.read(buckets=[1 - filled[0]], semi_keys=payload_keys)
